@@ -20,24 +20,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Conf notes (values live in util.BenchConfs so every measurement
-    // tool plans like the graded bench):
-    // - advisoryPartitionSizeInBytes=2m: sf1 knob study (BASELINE.md
-    //   round-5 appendix) — at tens-of-MB shuffle sizes AQE's default
-    //   64 MB advisory coalesces post-shuffle stages below the core
-    //   count, and the 10 MB broadcast default shuffle-joins dimension
-    //   tables that fit in memory 6× over. 2 MB/64 MB measured: tpch10
-    //   sf1 11.7→10.5 s, sf0.1 headliners 8.5→8.0.
-    // - initialPartitionNum=8×cores: round-7 scale fix — AQE can
-    //   COALESCE post-shuffle partitions but never split non-skewed
-    //   ones, so a static width equal to the core count spills as soon
-    //   as one shuffle outgrows executor memory (q_triangles ran 17×
-    //   wall for 10× data at sf1 on 32 static partitions). Start
-    //   shuffles WIDE and let the 2 MB advisory coalesce small stages
-    //   back down: sf1 graph wall fell 242→61 s (triangles) / 83→25 s
-    //   (katz), and the sf0.1 bench improved too (headline 3.94→3.41,
-    //   bench30 27.9→23.1, same-session A/B). This is exactly the conf
-    //   a 1000-executor deployment would run with.
+    // session confs and their measured reasons: util.BenchConfs
     val builder = graft.util.BenchConfs(
       SparkSession.builder().master(s"local[$cpus]"), cpus)
     // SPARK_GRAFT_CONF="k=v;k2=v2" — ad-hoc config overrides for local

@@ -11,7 +11,8 @@ object Verify {
     // optional 3rd arg (local use): comma-separated query names to dump
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // the JVM-wide codegen-cache cap is fixed by the first session
+    val spark = graft.util.BenchConfs.codegenCache(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -55,7 +55,7 @@ object ConnectedComponents {
     // unhashed edge relation re-exchanges the EDGE LIST — the big
     // side — once per round. At 100 TB that is `rounds` full-data
     // shuffles for one.
-    val P = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val P = graft.util.Spread.layoutPartitions(edges.sparkSession)
     // localCheckpoint, not persist (round 9): a cached relation's
     // partitioning is PLANNING-INVISIBLE under AQE (the cache compiles
     // to its own AdaptiveSparkPlan, so consumers see
@@ -83,10 +83,16 @@ object ConnectedComponents {
     // an EAGER checkpoint job plus a second job joining next against
     // labels to count changes — two blocking jobs and an extra
     // node-grain join per round.
+    // An empty node set sums to ZERO; a null sum over a NON-empty set
+    // (every node id null, or a non-ANSI decimal overflow) has no
+    // fixpoint to detect and fails here instead of reading as
+    // "converged".
     def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("label").cast("decimal(38,0)"))).first()
-        .getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty node set
+      val r = df.agg(count(lit(1)), sum(col("label").cast("decimal(38,0)"))).first()
+      if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
+      else Option(r.getDecimal(1)).getOrElse(throw new IllegalArgumentException(
+        s"ConnectedComponents: label sum is null over ${r.getLong(0)} nodes " +
+          "(null node ids, or decimal overflow with ANSI mode off)"))
     }
     var prevSum = labelSum(labels)
     var iter = 0

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.util.CacheScope
+import graft.util.{CacheScope, Spread}
 
 /** Distributed graph primitives over edge-list DataFrames — the
   * relational (GraphFrames-style) formulation: a graph is just an
@@ -72,10 +72,10 @@ object Graph {
     *
     * Pregel-style PARTITIONING REUSE (round-6): the two loop-stable
     * relations are persisted pre-hashed on their join keys with an
-    * EXPLICIT partition count (explicit N is exempt from AQE
-    * coalescing, so the layout stays join-compatible round after
-    * round), and localCheckpoint preserves outputPartitioning in its
-    * LogicalRDD — so each iteration's contribution join and node
+    * EXPLICIT partition count, one per core (explicit N is exempt from
+    * AQE coalescing, so the layout stays join-compatible round after
+    * round; [[Spread.layoutPartitions]]), and localCheckpoint preserves
+    * outputPartitioning in its LogicalRDD — so each iteration's contribution join and node
     * re-join reuse the standing layout instead of re-shuffling the
     * edge list `iters` times. At 100 TB the edge relation is the big
     * side; shuffling it once instead of once per round is the
@@ -90,7 +90,7 @@ object Graph {
     val e = CacheScope.persist(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val P = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val P = Spread.layoutPartitions(edges.sparkSession)
     // src carries (deg) with it so the per-iteration contribution needs
     // no extra join against the degree table
     val out = CacheScope.persist(e.join(deg, "src").repartition(P, col("src")))

@@ -1015,8 +1015,10 @@ object ExtraQueries2 {
     // doc_id tiebreak never matters for the VALUE at a rank.
     val byLen = Tables.documents(s, d).groupBy(col("n_chars"))
       .agg(count(lit(1)).as("c"))
+    // NULL lengths rank last, as in the oracle's ORDER BY (DuckDB's
+    // default null order); a rank in the null tail picks NULL
     val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("n_chars"))
+      .orderBy(col("n_chars").asc_nulls_last)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val cum = byLen
       .withColumn("cum", sum(col("c")).over(w))

@@ -738,7 +738,7 @@ object GraphQueries {
     // AQE coalescing), so each of the 4 rounds re-shuffles only the
     // node-grain label table, never the edge list (round-7: the
     // unhashed edge list re-exchanged 240M rows per round at sf10)
-    val P = s.sessionState.conf.numShufflePartitions
+    val P = graft.util.Spread.layoutPartitions(s)
     val edges = graft.util.CacheScope.persist(
       encEdges(s, d).repartition(P, col("dst")))
     // ONE lazy unrolled plan, the q_pagerank rule: each round's label

@@ -38,8 +38,9 @@ object PairCount {
       if (args.length >= 2 && args(0).startsWith("q"))
         (args(0).split(',').toSeq, args.drop(1).toSeq)
       else (Seq("q_lsh_cosine_pairs"), args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val builder = graft.util.BenchConfs.codegenCache(SparkSession.builder())
+      .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

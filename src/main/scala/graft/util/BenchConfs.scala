@@ -2,25 +2,84 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The canonical bench-session configuration, extracted from
-  * [[graft.Bench]] so the measurement tools (PlanTime, ExplainAudit,
-  * BucketedTpch) can build sessions that plan EXACTLY like the graded
-  * bench instead of each carrying a drifting copy of the conf block.
-  * A plan dumped under a different shuffle width or broadcast
-  * threshold is evidence about a different query — round 9's first
-  * finding (the pagerank standing-layout mismatch) was invisible under
-  * ExplainAudit's old local[8]/no-AQE-width session.
+/** The canonical bench-session configuration: [[graft.Bench]], the
+  * benchmark (`perfbench`) and the measurement tools (PlanTime, ExplainAudit)
+  * build their sessions from it, so every measured session plans
+  * exactly like the graded bench. A plan dumped under a different
+  * shuffle width or broadcast threshold is evidence about a different
+  * query.
   *
-  * Keep this list bit-identical to what Bench.main used inline through
-  * round 8; Bench itself now calls it (BenchSessionSpec pins the
-  * values). */
+  * Each conf and its measured reason:
+  *
+  *  - `advisoryPartitionSizeInBytes=2m`, `autoBroadcastJoinThreshold=64m`:
+  *    at tens-of-MB shuffle sizes AQE's default 64 MB advisory
+  *    coalesces post-shuffle stages below the core count, and the 10 MB
+  *    broadcast default shuffle-joins dimension tables that fit in
+  *    memory 6× over (sf1 knob study, BASELINE.md round-5 appendix).
+  *    2 MB / 64 MB measured: tpch10 sf1 11.7 → 10.5 s, sf0.1 headliners
+  *    8.5 → 8.0 s.
+  *  - `coalescePartitions.initialPartitionNum=8×cores`: AQE can coalesce
+  *    post-shuffle partitions but never split non-skewed ones, so a
+  *    static width equal to the core count spills as soon as one shuffle
+  *    outgrows executor memory (q_triangles ran 17× wall for 10× data at
+  *    sf1 on 32 static partitions). Shuffles start wide and the 2 MB
+  *    advisory coalesces small stages back down: sf1 triangles 242 → 61 s,
+  *    katz 83 → 25 s; sf0.1 headline 3.94 → 3.41 s, bench30 27.9 → 23.1 s
+  *    (same-session A/B). This makes `numShufflePartitions` 8×cores, so
+  *    explicit-width standing layouts take [[Spread.layoutPartitions]]
+  *    instead.
+  *  - `optimizer.canChangeCachedPlanOutputPartitioning=true`: Spark's
+  *    default (false) keeps AQE from coalescing the final shuffle of a
+  *    cached plan, so every `CacheScope.persist` over a shuffle stayed at
+  *    `initialPartitionNum` partitions, and every scan of it ran that many
+  *    tasks. Measured on the benchmark's warm traced batch pass (seeds
+  *    31, 32; `local[4]`), together with [[Spread.layoutPartitions]]:
+  *    tasks 2280 → 470, exchanges 124 → 123, task CPU 13.9 → 5.8–7.2 s,
+  *    answers unchanged; the conf alone took tasks 1245 → 470
+  *    (q_naive_bayes 494 → 28, q_lsh_cosine_pairs 135 → 11).
+  *  - `codegen.cache.maxEntries` = [[CodegenCacheMaxEntries]]: see there.
+  *
+  * Master is not set here: Bench sets `local[cpus]`; tools choose their
+  * own. */
 object BenchConfs {
 
-  /** Apply the standard bench confs for `cpus` cores to `b`.
-    * Master is NOT set here — Bench sets local[cpus] per the driver
-    * contract; tools may choose their own. */
+  /** Size of Spark's JVM-wide cache of compiled whole-stage and
+    * expression classes (`spark.sql.codegen.cache.maxEntries`, default
+    * 100). The cache is static: `CodeGenerator` reads the cap once, from
+    * the conf of the session active at the first compile, and a later
+    * session cannot change it. So the session builders that time or
+    * check queries take this value before `getOrCreate`: [[apply]]
+    * (Bench, `perfbench`, PlanTime, ExplainAudit) and
+    * [[codegenCache]] (Verify, PairCount, `TestSpark`).
+    *
+    * Measured working set (`CodegenMetrics` compile count, bench confs,
+    * `local[4]`, the sf0.1 fixture): one round of the served request set
+    * (the 24 SURVEY §2.1 queries, q_geo_distance, one `Pagination.page`
+    * and one `Search.search`, 27 requests) compiles 268 distinct classes,
+    * 294 counting table warm-up. At the default cap of 100 the warm
+    * session evicted and recompiled its own hot code: every later round
+    * compiled 277 classes again (about 10 per request, 3.4–3.8 s of
+    * Janino time per round). At this cap a later round compiles 0
+    * (CodegenCacheSpec pins this). Benchmark A/B (14 alternating pairs,
+    * `--seconds 15`): serve `latency_p50_ms` 441 → 266 ms, 14/14 pairs
+    * won. The retained classes and their source-string keys cost
+    * `peak_live_mb` 395 → 418 MB on serve, 373 → 385 MB on batch.
+    *
+    * Limit: numeric literals are inlined into generated code, so traffic
+    * with unbounded parameter values (any page number, any price band)
+    * still compiles once per new value; a seeded pool of a few values
+    * per parameter stays cached. */
+  val CodegenCacheMaxEntries = 2000
+
+  /** Set the codegen-cache cap on `b`, for session builders that do not
+    * take the rest of the bench confs. */
+  def codegenCache(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toLong)
+
+  /** Apply the standard bench confs for `cpus` cores to `b`. */
   def apply(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cpus)
+    codegenCache(b)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -28,5 +87,6 @@ object BenchConfs {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus.toInt * 8).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
 }

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Guard against FILE-BOUND parallelism starvation ahead of
   * compute-heavy stages: a scan's partition count is set by input
@@ -76,6 +76,20 @@ object Spread {
       else est.toLong
     math.max(declared, byStats)
   }
+
+  /** Partition count for an explicit-width standing layout (a
+    * loop-stable relation hashed once on its join key and reused every
+    * round): one partition per core, capped at the session's
+    * `numShufflePartitions`. An explicit `repartition(n, ...)` is exempt
+    * from AQE coalescing, and under the bench confs
+    * `numShufflePartitions` is `initialPartitionNum` = 8×cores, so reading
+    * it directly froze every standing layout, and every round that joins
+    * against it, at 8 tasks per core on inputs of any size. Limit: the
+    * count does not grow with the input, so a layout whose per-core share
+    * outgrows executor memory spills; logical stats cannot size it, since
+    * the layouts hold derived edge lists whose join estimates multiply. */
+  def layoutPartitions(s: SparkSession): Int =
+    math.min(s.sparkContext.defaultParallelism, s.sessionState.conf.numShufflePartitions)
 
   def apply(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

@@ -269,6 +269,21 @@ class PackingSpec extends AnyFunSuite {
       row.getAs[Long]("median") <= row.getAs[Long]("p75"))
   }
 
+  test("global median ranks NULL lengths last, like the oracle's ORDER BY") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("median_nulls").toString
+    // sorted NULLS LAST: 3, 5, 7, null, null, null, null (n = 7) — the
+    // p25 rank (2) lands on 5, the median (4) and p75 (6) ranks on NULL
+    Seq[(Long, Option[Long])]((1, Some(5)), (2, None), (3, Some(3)), (4, None),
+        (5, Some(7)), (6, None), (7, None))
+      .toDF("doc_id", "n_chars").write.parquet(s"$dir/documents.parquet")
+    val row = Registry.queries("q_global_median")(spark, dir).head()
+    assert(row.getAs[Long]("n_docs") == 7)
+    assert(row.getAs[Long]("p25") == 5)
+    assert(row.isNullAt(row.fieldIndex("median")))
+    assert(row.isNullAt(row.fieldIndex("p75")))
+  }
+
   test("integer kmeans partitions the collection: mass conserved, clusters tight") {
     val rows = Registry.queries("q_kmeans_arith")(spark, sfTiny).collect()
     assert(rows.map(_.getAs[Long]("cluster")).toSeq.sorted == (0L until 4L))

@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session for specs (one JVM-wide session; Test/fork). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // the JVM-wide codegen-cache cap is fixed by the first session, so
+    // specs run with the same cache as the bench
+    val s = graft.util.BenchConfs.codegenCache(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -18,6 +18,15 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(ConnectedComponents.labelPropagation(emptyEdges, "a", "b").count() == 0)
   }
 
+  test("ConnectedComponents fails on all-null node ids instead of converging") {
+    // every label null: the label sum is null over a non-empty node set,
+    // which must not read as the empty set's ZERO ("converged" at once)
+    val nulls = Seq[(Option[Long], Option[Long])]((None, None), (None, None)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](
+      ConnectedComponents.labelPropagation(nulls, "a", "b").collect())
+    assert(e.getMessage.contains("label sum is null over 1 nodes"))
+  }
+
   test("ConnectedComponents on a single self-loop resolves to itself") {
     val got = ConnectedComponents
       .labelPropagation(Seq((7L, 7L)).toDF("a", "b"), "a", "b")
