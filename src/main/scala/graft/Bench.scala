@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.BenchConfs
 
 /** Benchmark main: times the headline queries (SURVEY §2.5 + marked
   * bench anchors) on SPARK_GRAFT_SF_DIR, prints one JSON line. */
@@ -21,18 +22,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // session confs and their measured reasons: util.BenchConfs
-    val builder = graft.util.BenchConfs(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — ad-hoc config overrides for local
-    // tuning experiments (the driver never sets it)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v)              => builder.config(k.trim, v.trim)
-        case Array(s) if s.trim.isEmpty => () // tolerate ';;' / trailing ';'
-        case _ => sys.error(s"bad SPARK_GRAFT_CONF segment (want k=v): '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
+    val spark = BenchConfs.envOverrides(
+      BenchConfs(SparkSession.builder().master(s"local[$cpus]"), cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Service mode, matching the reference's cached served DataFrame
     // (main.py:147 df.cache()): tables persist once, queries run

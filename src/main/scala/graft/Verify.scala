@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.BenchConfs
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,22 +12,11 @@ object Verify {
     // optional 3rd arg (local use): comma-separated query names to dump
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the JVM-wide codegen-cache cap is fixed by the first session
-    val spark = graft.util.BenchConfs.codegenCache(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) (see graft.sources.Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the bench session, so the oracle checks the plans Bench times
+    val spark = BenchConfs.noCodegenFallback(
+        BenchConfs(SparkSession.builder().master(s"local[$cpus]"), cpus))
       // dump timestamps as us (never INT96) so pyarrow/DuckDB agree
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Lint promotion (r4 verdict item 8): a whole-stage method
-      // janino rejects (>64 KB) must FAIL that query's dump — the
-      // driver's correctness compare then flags it — instead of
-      // silently running interpreted (a 5–20× regression at 100 TB).
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

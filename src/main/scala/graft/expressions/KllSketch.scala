@@ -18,13 +18,20 @@ import org.apache.spark.sql.types._
   * regardless of n — the reason this composes at 100 TB where an
   * exact quantile's global sort does not.
   *
-  * Deployment shape matches CountMinSketch/TopKSketch: KllAgg builds
-  * the binary sketch in one partial-aggregable pass (partitions merge
-  * level-wise), KllQuantile probes it. With capacity ≥ n the level-0
-  * buffer never compacts and the sketch is provably EXACT (rank =
-  * ceil(q·n), the order statistic) — the oracle-checkable mode;
-  * KllSpec pins the error envelope under tight capacities where
+  * KllAgg builds the binary sketch in one partial-aggregable pass
+  * (partitions merge level-wise), KllQuantile probes it. With capacity
+  * ≥ n the level-0 buffer never compacts and the sketch is provably
+  * EXACT (rank = ceil(q·n), the order statistic) — the oracle-checkable
+  * mode; KllSpec pins the error envelope under tight capacities where
   * compaction does happen.
+  *
+  * Why not Spark's built-in `kll_sketch_agg_double`: it caps k at
+  * 65535, so it compacts above that many rows, at random. At k = 65535
+  * on sf0.1 orders (150k rows) it returned p25 = 125118.13,
+  * p50 = 249938.86 and p90 = 449856.84, where DuckDB's `quantile_disc`
+  * gives 125116.62, 249938.02 and 449843.87; it matched all five
+  * quantiles at sf0.01 (15k rows). This sketch, at q_kll_quantiles'
+  * capacity 2^21, stays exact through sf1.
   */
 object KllFns {
 

@@ -389,18 +389,20 @@ object TextQueries {
     FROM scored ORDER BY doc_id
   """))
 
-  /** Heavy-hitter words via the space-saving TypedImperativeAggregate
-    * (graft.expressions.TopKSketch) — one capacity-bounded pass, no
-    * full word groupBy. With capacity >> distinct items no eviction
-    * ever fires, so the sketch is EXACT and oracle-checkable here;
-    * TopKSketchSpec separately proves the tight-capacity guarantees. */
+  /** Heavy-hitter words via Spark's `approx_top_k` (a mergeable
+    * frequent-items sketch): one bounded pass, no full word groupBy.
+    * With far more tracked items than distinct words the sketch never
+    * purges, so its counts are exact and oracle-checkable here;
+    * TopKSketchSpec proves the tight-capacity guarantees. The sketch
+    * orders count ties its own way, so it returns 64 items and the top
+    * 20 are cut in the oracle's (cnt desc, word) order. */
   private val qHeavyHitters = BoundQuery("q_heavy_hitters", (s, d) => {
-    import graft.expressions.TopKSketch.topKSketch
     Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("word"))
-      .agg(topKSketch(s, col("word"), k = 20, capacity = 4096).as("top"))
+      .agg(expr("approx_top_k(word, 64, 4096)").as("top"))
       .select(explode(col("top")).as("e"))
-      .select(col("e.item").as("word"), col("e.cnt").as("cnt"))
+      .select(col("e.item").as("word"), col("e.count").as("cnt"))
+      .orderBy(col("cnt").desc, col("word")).limit(20)
   }, Some("""
     SELECT word, CAST(count(*) AS BIGINT) AS cnt
     FROM (SELECT unnest(list_filter(string_split(text,' '), x -> x <> '')) AS word

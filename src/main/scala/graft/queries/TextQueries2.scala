@@ -275,22 +275,21 @@ object TextQueries2 {
     FROM tf ORDER BY vocab_id
   """))
 
-  /** Count-min frequency estimates (expressions.CountMinSketch) for
-    * the exact top-20 words. Width 1<<14 >> the corpus vocabulary, so
-    * collisions vanish and the sketch is provably EXACT here — the
-    * oracle simply repeats the exact count; CmsSpec pins the
-    * never-undercount and bounded-overcount guarantees under tight
-    * widths where collisions do happen. */
+  /** Count-min frequency estimates (Spark's `countMinSketch`, built in
+    * one aggregation pass) for the exact top-20 words, probed on the
+    * driver. Width 1<<14 >> the corpus vocabulary, so collisions vanish
+    * and the estimates are exact here — the oracle simply repeats the
+    * exact count; BloomSpec pins the never-undercount and
+    * bounded-overcount guarantees under tight widths where collisions
+    * do happen. */
   private val qCmsWords = BoundQuery("q_cms_words", (s, d) => {
-    import graft.expressions.CountMinSketch._
     val words = Tables.documents(s, d).select(explode(tokens(col("text"))).as("word"))
-    val sketch = words.agg(cmsAgg(s, col("word"), depth = 4, width = 1 << 14).as("sk"))
-      .first().getAs[Array[Byte]](0)
-    words.groupBy("word").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("word")).limit(20)
-      .select(col("word"), col("cnt"),
-        cmsEstimate(s, lit(sketch), col("word"), depth = 4, width = 1 << 14).as("est"))
-      .orderBy("word")
+    val sketch = words.stat.countMinSketch(col("word"), 4, 1 << 14, 42)
+    val top = words.groupBy("word").agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("word")).limit(20).collect()
+      .map(r => (r.getString(0), r.getLong(1), sketch.estimateCount(r.getString(0))))
+    import s.implicits._
+    top.toSeq.toDF("word", "cnt", "est").orderBy("word")
   }, Some("""
     SELECT word, cnt, cnt AS est FROM (
       SELECT word, CAST(count(*) AS BIGINT) AS cnt

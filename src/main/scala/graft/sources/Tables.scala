@@ -40,7 +40,7 @@ object Tables {
         // TimestampType). Session timezone is pinned UTC by every
         // entrypoint, so the NTZ cast is the identity on the naive
         // clock reading — same instant DuckDB's epoch_us(ts) sees.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        graft.util.BenchConfs.readNanosAsLong(spark)
         val raw = spark.read.parquet(s"$dir/events.parquet")
         val normalized = raw.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>

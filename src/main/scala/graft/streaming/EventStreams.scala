@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.BenchConfs
 
 /** Structured Streaming over the events table (SURVEY §2.4
   * q_stream_hourly). The batch query in PipelineQueries computes the
@@ -39,7 +40,7 @@ object EventStreams {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def tsDivisor(spark: SparkSession, dir: String): Long =
     divisorCache.computeIfAbsent(dir, _ => {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      BenchConfs.readNanosAsLong(spark)
       val isNs = spark.read.parquet(dir).schema
         .find(_.name == "ts").exists(_.dataType == LongType)
       java.lang.Long.valueOf(if (isNs) 1000L else 1L)
@@ -70,7 +71,7 @@ object EventStreams {
                         readerOptions: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     val ttlMs = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(ttl))
     // month-denominated intervals have no fixed millisecond length and
@@ -115,7 +116,7 @@ object EventStreams {
     * would OOM on an infinite stream. Downstream agg = per-type counts
     * so the spec can compare against batch distinct. */
   def dedupedTypeCounts(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     spark.readStream
       .schema(eventsSchema)
       .parquet(dir)
@@ -154,7 +155,7 @@ object EventStreams {
   /** Raw event stream with the usable (us) timestamp restored —
     * the readStream entry point sinks and joins build on. */
   def raw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     spark.readStream.schema(eventsSchema).parquet(dir)
       .withColumn("ts", timestamp_micros(tsUsExpr(spark, dir)))
   }
@@ -175,7 +176,7 @@ object EventStreams {
                       watermarkDelay: String = "1 hour"): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     val ttlMs = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(ttl))
     require(ttlMs.months == 0,
@@ -215,7 +216,7 @@ object EventStreams {
     * directions — that's what lets Spark expire join state instead of
     * buffering either stream forever. */
   def viewPurchaseJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     def side(t: String, idAs: String, tsAs: String) =
       spark.readStream.schema(eventsSchema).parquet(dir)
         .where(col("event_type") === t)
@@ -247,7 +248,7 @@ object EventStreams {
                         watermarkDelay: String = "1 hour"): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     // watermark metadata must ride into the stateful operator's input
     // on the tsc column (see userRunningCounts)
@@ -291,7 +292,7 @@ object EventStreams {
     * watermark bounds how long a bar stays open. */
   def ohlcBars(spark: SparkSession, dir: String,
                watermarkDelay: String = "2 hours"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     spark.readStream.schema(eventsSchema).parquet(dir)
       .withColumn("ts_us", tsUsExpr(spark, dir))
       .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -310,7 +311,7 @@ object EventStreams {
 
   /** Streaming hourly counts per event type with a 2h watermark. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    BenchConfs.readNanosAsLong(spark)
     spark.readStream
       .schema(eventsSchema)
       .parquet(dir)

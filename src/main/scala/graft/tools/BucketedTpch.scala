@@ -36,19 +36,10 @@ object BucketedTpch {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
       "/tmp/graft_bucketed_warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Bench's confs, so the plain side reproduces the graded numbers
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+    // Bench's confs, so the plain side reproduces the graded numbers
+    val spark = graft.util.BenchConfs(
+        SparkSession.builder().master(s"local[$cpus]"), cpus)
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val buckets = cpus.toInt

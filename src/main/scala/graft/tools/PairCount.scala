@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max}
+import graft.util.BenchConfs
 
 /** Output-volume meter for the near-dup family (round-5 verdict item
   * 1): near-dup wall-time at scale is DOMINATED by answer size when
@@ -39,27 +40,10 @@ object PairCount {
         (args(0).split(',').toSeq, args.drop(1).toSeq)
       else (Seq("q_lsh_cosine_pairs"), args.toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = graft.util.BenchConfs.codegenCache(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide initial shuffle + AQE coalesce — Bench's round-7 scale
-      // conf, so PairCount's scale grades measure the shipped setup
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — same ad-hoc override hook as Bench,
-    // for conf A/B during scale profiling
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v)                => builder.config(k.trim, v.trim)
-        case Array(x) if x.trim.isEmpty => ()
-        case _ => sys.error(s"bad SPARK_GRAFT_CONF segment (want k=v): '$kv'")
-      }
-    })
-    val s = builder.getOrCreate()
+    // the bench session, so scale grades measure the shipped setup;
+    // SPARK_GRAFT_CONF overrides for conf A/B during scale profiling
+    val s = BenchConfs.envOverrides(
+      BenchConfs(SparkSession.builder().master(s"local[$cpus]"), cpus)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // warm the table registry per directory BEFORE timing, exactly
     // like Bench's service mode: ScaleUp fixtures are single-file

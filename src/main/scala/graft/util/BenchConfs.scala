@@ -2,12 +2,15 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The canonical bench-session configuration: [[graft.Bench]], the
-  * benchmark (`perfbench`) and the measurement tools (PlanTime, ExplainAudit)
-  * build their sessions from it, so every measured session plans
-  * exactly like the graded bench. A plan dumped under a different
-  * shuffle width or broadcast threshold is evidence about a different
-  * query.
+/** The one source of session confs. Every graft session builds from
+  * [[apply]]: [[graft.Bench]], the benchmark (`perfbench`),
+  * [[graft.Verify]], the test session (`TestSpark`) and the tools
+  * (PlanTime, ExplainAudit, PairCount, ScaleUp, BucketedTpch,
+  * CacheFootprint). So the oracle, the specs and the timed runs all check
+  * the same physical plans. A plan dumped under a different shuffle width
+  * or broadcast threshold is evidence about a different query. Callers
+  * set only what really differs: master, app name, BucketedTpch's
+  * warehouse path and Verify's dump timestamp type.
   *
   * Each conf and its measured reason:
   *
@@ -38,6 +41,7 @@ import org.apache.spark.sql.SparkSession
   *    answers unchanged; the conf alone took tasks 1245 → 470
   *    (q_naive_bayes 494 → 28, q_lsh_cosine_pairs 135 → 11).
   *  - `codegen.cache.maxEntries` = [[CodegenCacheMaxEntries]]: see there.
+  *  - `legacy.parquet.nanosAsLong=true`: see [[readNanosAsLong]].
   *
   * Master is not set here: Bench sets `local[cpus]`; tools choose their
   * own. */
@@ -47,10 +51,8 @@ object BenchConfs {
     * expression classes (`spark.sql.codegen.cache.maxEntries`, default
     * 100). The cache is static: `CodeGenerator` reads the cap once, from
     * the conf of the session active at the first compile, and a later
-    * session cannot change it. So the session builders that time or
-    * check queries take this value before `getOrCreate`: [[apply]]
-    * (Bench, `perfbench`, PlanTime, ExplainAudit) and
-    * [[codegenCache]] (Verify, PairCount, `TestSpark`).
+    * session cannot change it. So every session builder takes it from
+    * [[apply]] before `getOrCreate`.
     *
     * Measured working set (`CodegenMetrics` compile count, bench confs,
     * `local[4]`, the sf0.1 fixture): one round of the served request set
@@ -71,22 +73,50 @@ object BenchConfs {
     * per parameter stays cached. */
   val CodegenCacheMaxEntries = 2000
 
-  /** Set the codegen-cache cap on `b`, for session builders that do not
-    * take the rest of the bench confs. */
-  def codegenCache(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toLong)
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Apply the standard bench confs for `cpus` cores to `b`. */
   def apply(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    codegenCache(b)
+    b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toLong)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(NanosAsLong, "true")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus.toInt * 8).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Overlay for the sessions that check answers (Verify, `TestSpark`):
+    * `codegen.fallback=false`. A whole-stage method Janino rejects
+    * (over 64 KB) normally falls back to interpreted execution with only
+    * a log line, a silent 5–20× slowdown at scale. With the fallback off
+    * it throws, so an operator that outgrows codegen fails its Verify
+    * dump or its spec instead. Timed sessions keep Spark's fallback. */
+  def noCodegenFallback(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.codegen.fallback", "false")
+
+  /** `events.parquet` carries TIMESTAMP(NANOS), which Spark refuses to
+    * read (PARQUET_TYPE_ILLEGAL) unless it reads the column as a
+    * ns-epoch long. [[apply]] sets this for graft's own sessions; the
+    * readers of that file call this too, so a caller's session that was
+    * not built here reads it as well. */
+  def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set(NanosAsLong, "true")
+
+  /** `SPARK_GRAFT_CONF="k=v;k2=v2"`: ad-hoc conf overrides on top of
+    * [[apply]] for local tuning experiments (Bench, PairCount). Kept out
+    * of [[apply]], so the benchmark never reads the environment. */
+  def envOverrides(b: SparkSession.Builder): SparkSession.Builder = {
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v)                => b.config(k.trim, v.trim)
+        case Array(x) if x.trim.isEmpty => () // tolerate ';;' / trailing ';'
+        case _ => sys.error(s"bad SPARK_GRAFT_CONF segment (want k=v): '$kv'")
+      }
+    })
+    b
+  }
 }

@@ -34,17 +34,15 @@ class BloomSpec extends AnyFunSuite {
   }
 
   test("count-min never undercounts and stays inside the eps envelope") {
-    import graft.expressions.CountMinSketch._
+    // Spark's built-in count-min sketch, as q_cms_words uses it
     val rnd = new scala.util.Random(3)
     val items = Seq.fill(20000)(s"item${rnd.nextInt(300)}")
     val exact = items.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    // deliberately TIGHT width (128 << 300 distinct) to force collisions
+    // deliberately TIGHT width (128 << 300 distinct) to force collisions;
+    // partial sketches merge across the 8 partitions
     val sketch = items.toDF("i").repartition(8)
-      .agg(cmsAgg(spark, col("i"), depth = 4, width = 128).as("sk"))
-      .first().getAs[Array[Byte]](0)
-    val est = exact.keys.toSeq.toDF("i")
-      .select(col("i"), cmsEstimate(spark, lit(sketch), col("i"), 4, 128).as("e"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .stat.countMinSketch(col("i"), 4, 128, 42)
+    val est = exact.keys.map(k => k -> sketch.estimateCount(k)).toMap
     exact.foreach { case (k, c) =>
       assert(est(k) >= c, s"undercount for $k")                    // hard guarantee
       assert(est(k) <= c + 2L * items.size / 128, s"overcount blown for $k")

@@ -60,13 +60,18 @@ class PropertiesSpec extends AnyFunSuite {
           graft.queries.Registry.queries(n)(spark, sfTiny)
             .collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
         }
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    // under the bench confs AQE starts every shuffle at initialPartitionNum,
+    // not spark.sql.shuffle.partitions: change the width in effect
+    val width = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val before = spark.conf.get(width)
+    val widthA = spark.sessionState.conf.numShufflePartitions
     val a = snapshot()
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set(width, "7")
     try {
+      assert(spark.sessionState.conf.numShufflePartitions != widthA)
       val b = snapshot()
       assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    } finally spark.conf.set(width, before)
   }
 
   test("SimHashPoly matches the scalar vote model for any ascii token list") {

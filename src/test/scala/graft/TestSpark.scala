@@ -1,25 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.BenchConfs
 
 /** Shared local session for specs (one JVM-wide session; Test/fork). */
 object TestSpark {
+  /** Cores of the spec session, and the `cpus` its bench confs take. */
+  val Cpus = "4"
   lazy val spark: SparkSession = {
-    // the JVM-wide codegen-cache cap is fixed by the first session, so
-    // specs run with the same cache as the bench
-    val s = graft.util.BenchConfs.codegenCache(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // codegen lint: a whole-stage method janino rejects (>64 KB)
-      // normally falls back to interpreted with only a log line — a
-      // silent 5-20x regression at scale. In tests, make it THROW so
-      // any operator that outgrows codegen fails its spec instead.
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
+    // the bench session, so specs check the plans Bench times
+    val s = BenchConfs.noCodegenFallback(BenchConfs(
+        SparkSession.builder().master(s"local[$Cpus]").appName("graft-test"), Cpus))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Fixture-window noise control (round-5 verdict item 8): spec
