@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.CacheScope
 
 /** Distributed connected components over an edge list — the missing
   * last step of near-dup deduplication: candidate PAIRS (minhash /
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   * O(log diameter). Each round is two shuffles keyed by node id —
   * never materializes anything super-linear in |edges|.
   *
-  * Scale notes: `localCheckpoint` every segment truncates the lineage
+  * Scale notes: every segment is cut with [[CacheScope.checkpoint]],
   * so plan size stays O(1) across iterations (iterative DataFrame jobs
   * otherwise re-plan an exponentially growing tree); convergence is
   * detected by the exact monotone label-sum riding the segment's own
@@ -50,39 +51,22 @@ object ConnectedComponents {
                                  maxIter: Int = 25, requireConvergence: Boolean = false)
       : (DataFrame, Boolean) = {
     val e = edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    // Undirected: propagate both ways. Keep PRE-HASHED on the join
-    // key: every round's neighbor-min joins adj on `b`, and an
+    // Undirected: propagate both ways. A standing layout hashed on the
+    // join key: every round's neighbor-min joins adj on `b`, and an
     // unhashed edge relation re-exchanges the EDGE LIST — the big
     // side — once per round. At 100 TB that is `rounds` full-data
     // shuffles for one.
-    val P = graft.util.Spread.layoutPartitions(edges.sparkSession)
-    // localCheckpoint, not persist (round 9): a cached relation's
-    // partitioning is PLANNING-INVISIBLE under AQE (the cache compiles
-    // to its own AdaptiveSparkPlan, so consumers see
-    // UnknownPartitioning and EnsureRequirements re-exchanged the edge
-    // list once per round — exactly the re-shuffle this standing
-    // layout exists to avoid). A LogicalRDD carries its
-    // HashPartitioning(b, P) into every round's join, so only the
-    // node-grain label table moves per round; blocks are freed by the
-    // ContextCleaner when the loop's result is dropped (the same
-    // lifecycle as the per-round label checkpoints).
-    val adj = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .repartition(P, col("b"))
-      .localCheckpoint(false)
-    var labels = adj.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    // Convergence probe (round 9): labels are NON-INCREASING per node
-    // (min of self and neighbors, then a shortcut that only ever jumps
-    // toward the component min), so Σ label is strictly decreasing
-    // until the fixpoint and "sum unchanged ⟺ no label changed". The
-    // sum is exact (decimal(38,0) — |nodes|·maxId ≪ 10^38) and rides
-    // the SAME job that materializes the round's lazy checkpoint, so a
-    // round costs ONE driver-blocking job. Previously each round ran
-    // an EAGER checkpoint job plus a second job joining next against
-    // labels to count changes — two blocking jobs and an extra
-    // node-grain join per round.
+    val adj = CacheScope.checkpoint(
+      e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct(), col("b"))
+    var labels = CacheScope.checkpoint(
+      adj.select(col("a").as("id")).distinct().withColumn("label", col("id")))
+    // Convergence probe: labels are NON-INCREASING per node (min of
+    // self and neighbors, then a shortcut that only ever jumps toward
+    // the component min), so Σ label is strictly decreasing until the
+    // fixpoint and "sum unchanged ⟺ no label changed". The sum is exact
+    // (decimal(38,0) — |nodes|·maxId ≪ 10^38) and rides the SAME job
+    // that materializes the segment's cut, so a segment costs ONE
+    // driver-blocking job.
     // An empty node set sums to ZERO; a null sum over a NON-empty set
     // (every node id null, or a non-ANSI decimal overflow) has no
     // fixpoint to detect and fails here instead of reading as
@@ -98,25 +82,24 @@ object ConnectedComponents {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      // TWO rounds per blocking job (round 9, the pageRankUntil
-      // segment pattern): rounds inside a segment unroll lazily and
+      // TWO rounds per blocking job (the pageRankUntil segment
+      // pattern): rounds inside a segment unroll lazily and
       // materialize together in the probe's job, halving the
       // sequential job count the loop pays — on the q_dbscan ε-graph
-      // (16 rounds to converge) the loop ran 16 blocking jobs before,
-      // 8 after. Convergence across a segment is still exact: the sum
+      // (16 rounds to converge) 8 blocking jobs instead of 16.
+      // Convergence across a segment is still exact: the sum
       // is monotone per ROUND, so segment-sum unchanged ⟺ both rounds
       // were the identity ⟺ fixpoint.
       val steps = math.min(2, maxIter - iter)
-      var seg = labels
-      for (_ <- 1 to steps) {
+      // the segment materializes inside the sum probe's job and is the
+      // standing input of the next segment
+      val next = CacheScope.checkpoint((1 to steps).foldLeft(labels) { (seg, _) =>
         // min label among neighbors, then min with own label — as ONE
         // aggregation over the union of neighbor labels and own labels
-        // (round 9: the former shape aggregated neighbor minima and
-        // then LEFT JOINed them back onto `labels` for the least();
-        // identical algebra — min over the union ≡ least(own,
-        // coalesce(nbrMin, own)) — but the join re-exchanged and
-        // sorted both node-grain sides every round; the union rides
-        // the single exchange the aggregation needs anyway)
+        // (min over the union ≡ least(own, coalesce(nbrMin, own)); a
+        // LEFT JOIN of neighbor minima back onto `labels` re-exchanged
+        // and sorted both node-grain sides every round, while the
+        // union rides the single exchange the aggregation needs anyway)
         val stepped = adj.join(seg, adj("b") === seg("id"))
           .select(adj("a").as("id"), col("label"))
           .union(seg)
@@ -127,13 +110,10 @@ object ConnectedComponents {
         // runtime by exchange reuse (one exchange, two reduce-side
         // aggs over node-grain rows).
         val roots = stepped.select(col("id").as("rid"), col("label").as("rlabel"))
-        seg = stepped.join(roots, stepped("label") === roots("rid"), "left")
+        stepped.join(roots, stepped("label") === roots("rid"), "left")
           .select(stepped("id"),
             least(stepped("label"), coalesce(col("rlabel"), stepped("label"))).as("label"))
-      }
-      // LAZY checkpoint: the segment materializes inside the sum
-      // probe's job and is the standing input of the next segment
-      val next = seg.localCheckpoint(false)
+      })
       val curSum = labelSum(next)
       labels = next
       converged = curSum.compareTo(prevSum) == 0

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.util.{CacheScope, Spread}
+import graft.util.CacheScope
 
 /** Distributed graph primitives over edge-list DataFrames — the
   * relational (GraphFrames-style) formulation: a graph is just an
@@ -48,55 +48,43 @@ object Graph {
     * truncate lineage), each round here consumes `ranks` exactly
     * once, so the unrolled plan grows LINEARLY in `iters` and the
     * whole recurrence stays one lazy plan: no per-round driver
-    * barrier, one job end-to-end (round-6: the per-round eager
-    * localCheckpoint cost 8 blocking jobs ≈ 5 of q_pagerank's 7 s at
-    * sf0.1 and would serialize rounds on a real cluster too). Edges
-    * and outdegrees are computed once and persisted through
-    * CacheScope.
+    * barrier, one job end-to-end (a per-round eager cut cost 8
+    * blocking jobs ≈ 5 of q_pagerank's 7 s at sf0.1 and would
+    * serialize rounds on a real cluster too). Edges and outdegrees
+    * are computed once, as standing layouts ([[prSetup]]).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, scale: Long = DefaultScale): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val (out, nodes, base) = prSetup(edges, srcCol, dstCol, scale)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var i = 0
-    while (i < iters) { ranks = prRound(out, nodes, ranks, base); i += 1 }
-    ranks
+    (1 to iters).foldLeft(nodes.withColumn("rank", lit(scale)))(
+      (r, _) => prRound(out, nodes, r, base))
   }
 
   /** The loop-stable PageRank relations, shared by [[pageRank]],
-    * [[pageRankStep]] and [[pageRankUntil]] (round-7 advice item 5:
-    * pageRank and pageRankStep previously duplicated this body, and
-    * q_pagerank_converge's oracle parity silently depended on the two
-    * copies staying bit-identical — now there is one copy).
+    * [[pageRankStep]] and [[pageRankUntil]], so q_pagerank_converge's
+    * oracle parity rests on one copy of the setup.
     *
-    * Pregel-style PARTITIONING REUSE (round-6): the two loop-stable
-    * relations are persisted pre-hashed on their join keys with an
-    * EXPLICIT partition count, one per core (explicit N is exempt from
-    * AQE coalescing, so the layout stays join-compatible round after
-    * round; [[Spread.layoutPartitions]]), and localCheckpoint preserves
-    * outputPartitioning in its LogicalRDD — so each iteration's contribution join and node
-    * re-join reuse the standing layout instead of re-shuffling the
-    * edge list `iters` times. At 100 TB the edge relation is the big
-    * side; shuffling it once instead of once per round is the
-    * difference between 1 and `iters` full-data exchanges. Node ids
-    * keep their input type (the triangleCount rule): both per-round
-    * shuffles key on the node id, and integer ids shuffle ~3× fewer
-    * bytes than string renderings. The persists are plan-keyed
-    * through CacheScope, so every caller in a scope shares one
-    * standing layout. */
+    * Pregel-style partitioning reuse: both relations are standing
+    * layouts ([[CacheScope.checkpoint]]) hashed on their join keys, so
+    * each round's contribution join and node union reuse the layout
+    * instead of re-shuffling the edge list `iters` times. At 100 TB the
+    * edge relation is the big side; shuffling it once instead of once
+    * per round is the difference between 1 and `iters` full-data
+    * exchanges. Node ids keep their input type (the triangleCount
+    * rule): both per-round shuffles key on the node id, and integer ids
+    * shuffle ~3× fewer bytes than string renderings. The layouts are
+    * plan-keyed, so every caller in a scope shares one. */
   private def prSetup(edges: DataFrame, srcCol: String, dstCol: String,
                       scale: Long): (DataFrame, DataFrame, Long) = {
     val e = CacheScope.persist(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val P = Spread.layoutPartitions(edges.sparkSession)
     // src carries (deg) with it so the per-iteration contribution needs
     // no extra join against the degree table
-    val out = CacheScope.persist(e.join(deg, "src").repartition(P, col("src")))
-    val nodes = CacheScope.persist(
-      e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
-        .repartition(P, col("node")))
+    val out = CacheScope.checkpoint(e.join(deg, "src"), col("src"))
+    val nodes = CacheScope.checkpoint(
+      e.select(col("src").as("node")).union(e.select(col("dst"))).distinct(), col("node"))
     (out, nodes, 15L * scale / 100L)
   }
 
@@ -104,21 +92,17 @@ object Graph {
     * partial) over the union of per-edge contributions and a zero row
     * per node.
     *
-    * Round 9 (optimization): this was previously contribution-agg +
-    * LEFT JOIN back to the node set — identical algebra
-    * (coalesce(s, 0) ≡ summing one extra 0 per node), but the join
-    * planned as a SortMergeJoin that re-exchanged AND re-sorted both
-    * sides every round: under AQE the cached node set's partitioning
-    * is planning-invisible (the cache compiles to its own
-    * AdaptiveSparkPlan, so consumers see UnknownPartitioning and
-    * EnsureRequirements re-shuffles it each round — measured in
-    * plans/r09/q_pagerank_before.txt: 17 node-keyed exchanges + 8
-    * sorts for 8 rounds). The union keeps the zero-filled node set in
-    * the SAME single aggregation: per round exactly ONE exchange, no
-    * join back, no sorts, and no reliance on any broadcast for the
-    * node-completeness step (scale-safe: the node set never needs to
-    * fit anywhere). plans/r09/q_pagerank_after.txt: 9 node-keyed
-    * exchanges, 0 SortMergeJoins. */
+    * Contribution-agg + LEFT JOIN back to the node set is the same
+    * algebra (coalesce(s, 0) ≡ summing one extra 0 per node), but the
+    * join planned as a SortMergeJoin that re-exchanged AND re-sorted
+    * both sides every round (plans/r09/q_pagerank_before.txt: 17
+    * node-keyed exchanges + 8 sorts for 8 rounds). The union keeps the
+    * zero-filled node set in the SAME single aggregation: per round
+    * exactly ONE exchange, no join back, no sorts, and no reliance on
+    * any broadcast for the node-completeness step (scale-safe: the
+    * node set never needs to fit anywhere).
+    * plans/r09/q_pagerank_after.txt: 9 node-keyed exchanges, 0
+    * SortMergeJoins. */
   private def prRound(out: DataFrame, nodes: DataFrame, ranks: DataFrame,
                       base: Long): DataFrame =
     out.join(ranks, out("src") === ranks("node"))
@@ -131,9 +115,9 @@ object Graph {
   /** ONE additional PageRank round applied to an existing rank table —
     * the exact recurrence body of [[pageRank]], exposed so convergence
     * diagnostics (q_pagerank_converge) can compare consecutive rounds
-    * without re-running the whole unroll twice. Same standing-layout
-    * persists (plan-keyed, so a caller that already built them shares
-    * the cache). */
+    * without re-running the whole unroll twice. Same standing layouts
+    * (plan-keyed, so a caller that already built them in its scope
+    * shares them). */
   def pageRankStep(edges: DataFrame, srcCol: String, dstCol: String,
                    ranks: DataFrame, scale: Long = DefaultScale): DataFrame = {
     val (out, nodes, base) = prSetup(edges, srcCol, dstCol, scale)
@@ -142,17 +126,17 @@ object Graph {
 
   /** Residual-driven PageRank: iterate until the L∞ round-over-round
     * residual falls to `residualPpm` parts-per-million of the base
-    * mass `scale`, probing every `checkEvery` rounds (round-7 verdict
-    * item 6 — the serving API a real pipeline wants, now that
-    * q_pagerank_converge has proven the residual monotone on this
-    * recurrence; the fixed-`iters` [[pageRank]] stays the
-    * oracle-replayed contract).
+    * mass `scale`, probing every `checkEvery` rounds —
+    * the serving API a real pipeline wants, since q_pagerank_converge
+    * shows the residual monotone on this recurrence; the fixed-`iters`
+    * [[pageRank]] stays the oracle-replayed contract.
     *
     * Cost shape: rounds run LAZILY in segments of `checkEvery`; each
     * probe is ONE job that materializes the segment (the penultimate
-    * round is lazily localCheckpoint-ed so the final round and the
-    * residual read share it, and so the next segment builds on a
-    * materialized LogicalRDD instead of re-deriving the unroll). The
+    * and final rounds are cut with [[CacheScope.checkpoint]], so the
+    * final round and the residual read share the penultimate one, and
+    * the next segment builds on a materialized cut instead of
+    * re-deriving the unroll). The
     * probe itself is a driver-side 1-row aggregate — the same
     * node-keyed join every round already does, nothing extra shuffles.
     * Worst case (never converges) this runs `maxIters` rounds in
@@ -173,18 +157,15 @@ object Graph {
     var residual = Long.MaxValue
     while (itersRun < maxIters && residual > residualPpm) {
       val steps = math.min(checkEvery, maxIters - itersRun)
-      var penult = prev
-      var j = 0
-      while (j < steps - 1) { penult = prRound(out, nodes, penult, base); j += 1 }
-      // lazy: materializes once, inside the probe job, then backs both
-      // the final round and the next segment
-      val pCp = penult.localCheckpoint(false)
-      val cur = prRound(out, nodes, pCp, base).localCheckpoint(false)
+      // materializes once, inside the probe job, then backs both the
+      // final round and the next segment
+      val pCp = CacheScope.checkpoint(
+        (1 until steps).foldLeft(prev)((r, _) => prRound(out, nodes, r, base)))
+      val cur = CacheScope.checkpoint(prRound(out, nodes, pCp, base))
       // ppm via BigInt: an L∞ diff on a hub-heavy graph can exceed
       // Long.MaxValue/1e6 ≈ 9.2×scale early in the iteration (a
       // 1000-leaf star's round-1 hub diff is ~850×scale), and a long
       // multiply would wrap negative and report false convergence
-      // (review fix)
       val linf = cur
         .join(pCp.withColumnRenamed("rank", "prev"), Seq("node"))
         .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0L)).as("linf"))
@@ -303,9 +284,9 @@ object Graph {
     * Frontier-free formulation: labels(v) = min hop seen so far;
     * each round relaxes labels through one join + min-agg. A round
     * changes nothing once all shortest paths ≤ maxHops are found, so
-    * the loop exits early on a cheap changed-count. Per round: one
-    * shuffle keyed by dst + the convergence probe. Lineage truncated
-    * per round via localCheckpoint. */
+    * the loop exits early once the labelled node count stops growing.
+    * Per round: one shuffle keyed by dst and one probe job
+    * ([[cutLoop]]). */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
@@ -314,22 +295,36 @@ object Graph {
     // shuffle ~3× fewer bytes than string renderings
     val e = CacheScope.persist(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    var labels = sources.select(col(sourceCol).as("node"))
-      .distinct().withColumn("hop", lit(0L)).localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (i < maxHops && !converged) {
-      val relaxed = e.join(labels, e("src") === labels("node"))
-        .select(col("dst").as("node"), (col("hop") + 1).as("hop"))
-      val next = labels.union(relaxed)
+    cutLoop(sources.select(col(sourceCol).as("node")).distinct().withColumn("hop", lit(0L)),
+        maxHops, probe = true) { labels =>
+      labels.union(e.join(labels, e("src") === labels("node"))
+          .select(col("dst").as("node"), (col("hop") + 1).as("hop")))
         .groupBy("node").agg(min(col("hop")).as("hop"))
-        .localCheckpoint(true)
-      val grew = next.count() > labels.count()
-      labels = next
-      converged = !grew
-      i += 1
     }
-    labels
+  }
+
+  /** Runs `round` from `start` for at most `maxRounds` rounds, cutting
+    * the start and every round's result with [[CacheScope.checkpoint]].
+    * With `probe` the loop stops after a round that leaves the row count
+    * unchanged: one job per round materializes the cut and counts it,
+    * and the previous round's count is carried, not re-run. Without it
+    * the cuts materialize inside the caller's final job. */
+  private def cutLoop(start: DataFrame, maxRounds: Int, probe: Boolean)(
+      round: DataFrame => DataFrame): DataFrame = {
+    var cur = CacheScope.checkpoint(start)
+    var size = if (probe) cur.count() else 0L
+    var rounds = 0
+    var stable = false
+    while (!stable && rounds < maxRounds) {
+      cur = CacheScope.checkpoint(round(cur))
+      if (probe) {
+        val n = cur.count()
+        stable = n == size
+        size = n
+      }
+      rounds += 1
+    }
+    cur
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop nodes
@@ -341,8 +336,9 @@ object Graph {
     *
     * Per round: one degree aggregation (map-side partial, keyed on
     * node) + two left-semi joins filtering the edge list — all
-    * node-key shuffles, no window, no collect. Lineage truncates per
-    * round via localCheckpoint (the ConnectedComponents discipline).
+    * node-key shuffles, no window, no collect. Each round's surviving
+    * edge list is cut ([[cutLoop]]): the next round references it three
+    * times (degree union + semi join), so the lineage must truncate.
     * Round count = peeling depth of the graph (typically small; worst
     * case the degeneracy ordering's length). With `maxRounds` set the
     * loop runs EXACTLY that many rounds with no convergence probes —
@@ -359,30 +355,15 @@ object Graph {
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             maxRounds: Int = Int.MaxValue): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val bounded = maxRounds != Int.MaxValue
-    var alive = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .localCheckpoint(true)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val deg = alive.select(col("a").as("node"))
+    val alive = cutLoop(edges.select(col(aCol).as("a"), col(bCol).as("b")),
+        maxRounds, probe = maxRounds == Int.MaxValue) { alive =>
+      val keep = alive.select(col("a").as("node"))
         .union(alive.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select("node")
-      // alive is referenced 3× per round (degree union + semi join),
-      // so lineage MUST truncate — but only the convergence-probing
-      // unbounded path needs the checkpoint EAGER (count() each
-      // round). Bounded runs checkpoint lazily: the LogicalRDD is
-      // shared by all three references and materializes once inside
-      // the single final job, instead of `maxRounds` blocking jobs
-      // each writing the surviving edge list to the block store.
-      val next = alive
+        .where(col("deg") >= k).select("node")
+      alive
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(!bounded)
-      if (!bounded) done = next.count() == alive.count()
-      alive = next
-      rounds += 1
     }
     alive.select(col("a").as("node")).union(alive.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

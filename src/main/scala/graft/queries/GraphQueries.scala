@@ -688,10 +688,11 @@ object GraphQueries {
     * hub needs the df-cap treatment before round 3). Top-50 via
     * TakeOrdered, never a global sort. */
   private val qKatz = BoundQuery("q_katz", (s, d) => {
-    // the walk recurrence references the edge relation three times —
-    // persist it once (round-7: unpersisted, each w_k re-scanned the
-    // fact table and re-shuffled the distinct)
-    val edges = graft.util.CacheScope.persist(encEdges(s, d))
+    // the walk recurrence references the edge relation three times,
+    // each time joining on `src`: one standing layout hashed on it
+    // (unpinned, each w_k re-scanned the fact table and re-shuffled
+    // the distinct)
+    val edges = graft.util.CacheScope.checkpoint(encEdges(s, d), col("src"))
     val w1 = edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("w1"))
     val w2 = edges.join(w1.withColumnRenamed("node", "src"), "src")
       .groupBy(col("dst").as("node")).agg(sum(col("w1")).as("w2"))
@@ -732,24 +733,19 @@ object GraphQueries {
     * hence hash-gated — the async random-order variant trades that
     * for faster convergence and is the documented production knob. */
   private val qLabelProp = BoundQuery("q_label_prop", (s, d) => {
-    // the Pregel standing-layout rule (operators/Graph.pageRank):
-    // the loop-stable edge relation persists PRE-HASHED on the
-    // round's join key with an explicit partition count (exempt from
-    // AQE coalescing), so each of the 4 rounds re-shuffles only the
-    // node-grain label table, never the edge list (round-7: the
-    // unhashed edge list re-exchanged 240M rows per round at sf10)
-    val P = graft.util.Spread.layoutPartitions(s)
-    val edges = graft.util.CacheScope.persist(
-      encEdges(s, d).repartition(P, col("dst")))
+    // the Pregel standing-layout rule (operators/Graph.pageRank): the
+    // loop-stable edge relation is hashed on the round's join key, so
+    // each of the 4 rounds re-shuffles only the node-grain label
+    // table, never the edge list (unhashed, the edge list
+    // re-exchanged 240M rows per round at sf10)
+    val edges = graft.util.CacheScope.checkpoint(encEdges(s, d), col("dst"))
     // ONE lazy unrolled plan, the q_pagerank rule: each round's label
     // table is consumed exactly once (the next round's join), so the
-    // plan grows LINEARLY in rounds and nothing recomputes — while the
-    // previous per-round EAGER localCheckpoint(true) materialized the
-    // full node-grain table through a driver barrier 5× per query
-    // (round-7 scale grade: 12.7× wall for 10× data sf1→sf10, the only
-    // graph slope over 10×; lazy single-plan re-read 63.9→29.6 s at
-    // sf10 = 5.5× for 10× data, and the per-round barriers would
-    // serialize a 1000-executor cluster identically).
+    // plan grows LINEARLY in rounds and nothing recomputes. Per-round
+    // eager cuts of the node-grain table cost 12.7× wall for 10× data
+    // sf1→sf10, the only graph slope over 10×; the lazy single plan
+    // read 63.9→29.6 s at sf10 = 5.5× for 10× data, and per-round
+    // barriers would serialize a 1000-executor cluster identically.
     var lab = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to 4) {

@@ -233,15 +233,14 @@ object RetrievalQueries {
     // stages leaves it at ~7 s) but the DRIVER re-walking the ~3^5-
     // copy analyzed tree on every action: caches substitute after
     // analysis, so each count() still paid seconds of Catalyst time
-    // (round-6 PlanTime split: build 5.0 s / exec-on-warm-cache
-    // 6.4 s, all driver). localCheckpoint TRUNCATES the lineage to a
-    // LogicalRDD per stage — plan size is constant in the stage
-    // count — and the checkpoint is LAZY: the shared LogicalRDDs
-    // (≤5 rows each) materialize inside the one final job instead of
-    // 5 blocking driver jobs. Stages remain distributed DataFrames;
-    // the oracle's CTE unroll is untouched.
-    var sel = cand.orderBy(desc("rel_u"), col("id")).limit(1)
-      .select(col("id"), lit(1L).as("pick")).localCheckpoint(false)
+    // (PlanTime split: build 5.0 s / exec-on-warm-cache 6.4 s, all
+    // driver). A checkpoint per stage cuts the lineage, so plan size is
+    // constant in the stage count, and the cuts (≤5 rows each)
+    // materialize inside the one final job instead of 5 blocking
+    // driver jobs. Stages remain distributed DataFrames; the oracle's
+    // CTE unroll is untouched.
+    var sel = CacheScope.checkpoint(cand.orderBy(desc("rel_u"), col("id")).limit(1)
+      .select(col("id"), lit(1L).as("pick")))
     for (t <- 2 to 5) {
       val msim = sim.join(sel.select(col("id").as("id_b")), Seq("id_b"))
         .groupBy(col("id_a").as("id")).agg(max(col("sim_u")).as("msim"))
@@ -250,7 +249,7 @@ object RetrievalQueries {
         .withColumn("mmr_u", lit(7L) * col("rel_u") - lit(3L) * col("msim"))
         .orderBy(desc("mmr_u"), col("id")).limit(1)
         .select(col("id"), lit(t.toLong).as("pick"))
-      sel = sel.union(pick).localCheckpoint(false)
+      sel = CacheScope.checkpoint(sel.union(pick))
     }
     sel.join(cand, Seq("id"))
       .select(col("pick"), col("id"), col("rel_u"))

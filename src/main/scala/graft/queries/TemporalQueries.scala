@@ -219,15 +219,14 @@ object TemporalQueries {
       bi.join(broadcast(out), "cur")
         .select(col("cur"), col("nxt"), col("n"), col("out_n")))
     val states = tm.select(col("cur").as("state")).distinct()
-    var pi = states.crossJoin(broadcast(
+    var pi = graft.util.CacheScope.checkpoint(states.crossJoin(broadcast(
         states.agg(count(lit(1)).as("k"))))
-      .select(col("state"), expr("1000000 div k").as("pi"))
-      .localCheckpoint(true)
+      .select(col("state"), expr("1000000 div k").as("pi")))
     for (_ <- 1 to 8) {
-      pi = tm.join(pi.withColumnRenamed("state", "cur"), "cur")
-        .groupBy(col("nxt").as("state"))
-        .agg(sum(expr("(pi * n) div out_n")).as("pi"))
-        .localCheckpoint(true)
+      pi = graft.util.CacheScope.checkpoint(
+        tm.join(pi.withColumnRenamed("state", "cur"), "cur")
+          .groupBy(col("nxt").as("state"))
+          .agg(sum(expr("(pi * n) div out_n")).as("pi")))
     }
     pi.select(col("state"), col("pi").as("pi_micro")).orderBy("state")
   }, Some {

@@ -29,14 +29,15 @@ import org.apache.spark.sql.SparkSession
   *    advisory coalesces small stages back down: sf1 triangles 242 → 61 s,
   *    katz 83 → 25 s; sf0.1 headline 3.94 → 3.41 s, bench30 27.9 → 23.1 s
   *    (same-session A/B). This makes `numShufflePartitions` 8×cores, so
-  *    explicit-width standing layouts take [[Spread.layoutPartitions]]
+  *    standing layouts take the width of [[CacheScope.checkpoint]]
   *    instead.
   *  - `optimizer.canChangeCachedPlanOutputPartitioning=true`: Spark's
   *    default (false) keeps AQE from coalescing the final shuffle of a
   *    cached plan, so every `CacheScope.persist` over a shuffle stayed at
   *    `initialPartitionNum` partitions, and every scan of it ran that many
   *    tasks. Measured on the benchmark's warm traced batch pass (seeds
-  *    31, 32; `local[4]`), together with [[Spread.layoutPartitions]]:
+  *    31, 32; `local[4]`), together with the layout width of
+  *    [[CacheScope.checkpoint]]:
   *    tasks 2280 → 470, exchanges 124 → 123, task CPU 13.9 → 5.8–7.2 s,
   *    answers unchanged; the conf alone took tasks 1245 → 470
   *    (q_naive_bayes 494 → 28, q_lsh_cosine_pairs 135 → 11).

@@ -1,12 +1,15 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-/** Scoped, REFCOUNTED lifetime for operator-internal `persist`s.
+/** Scoped, REFCOUNTED lifetime for operator-internal caches: the
+  * `persist`s of multi-referenced intermediates and the [[checkpoint]]s
+  * of loop-stable relations and lineage cuts.
   *
   * Several operators persist an intermediate (LSH signatures, range-
   * partitioned rank input, shingle tables) because the plan forks
@@ -15,25 +18,22 @@ import scala.collection.mutable.ArrayBuffer
   * (repartitionByRange RESAMPLES its boundaries per branch when
   * unpinned, see Ranking). Those caches must outlive the operator
   * call (the returned DataFrame is lazy) but NOT the query: a
-  * long-lived session running the whole registry (Verify runs ~395
-  * queries in one SparkSession) would otherwise accumulate every
+  * long-lived session running the whole registry (Verify runs every
+  * query in one SparkSession) would otherwise accumulate every
   * intermediate cache block for the life of the process.
   *
-  * Refcounting (round-5 fix): concurrent queries may persist
-  * LOGICALLY IDENTICAL intermediates — q_ljung_box, q_cooks_distance
-  * and q_breusch_pagan all persist the same daily-revenue series.
-  * Spark's CacheManager plan-matches them onto ONE cache entry
-  * (sameResult ignores alias names), so a naive per-thread unpersist
-  * drops the shared entry while a sibling query is mid-flight
-  * (measured: a concurrent Verify dump returned an EMPTY
-  * q_cooks_distance whenever its scope raced q_breusch_pagan's).
-  * Entries are therefore keyed by the session + the analyzed plan's
-  * canonicalized form — EXACTLY CacheManager's match granularity —
-  * and refcounted across threads: a scope close decrements, and only
-  * the LAST scope out unpersists. A caller persisting an equal plan
-  * with the SAME column names adopts the stored DataFrame; one whose
-  * aliases differ keeps its own (un-persisted) DataFrame, which
-  * Spark's plan-matching serves from the shared cache anyway.
+  * Refcounting: concurrent queries may cache LOGICALLY IDENTICAL
+  * intermediates — q_ljung_box, q_cooks_distance and q_breusch_pagan
+  * all persist the same daily-revenue series. Spark's CacheManager
+  * plan-matches them onto ONE cache entry (sameResult ignores alias
+  * names), so a naive per-thread unpersist drops the shared entry while
+  * a sibling query is mid-flight (measured: a concurrent Verify dump
+  * returned an EMPTY q_cooks_distance whenever its scope raced
+  * q_breusch_pagan's). Entries are therefore keyed by the session + the
+  * analyzed plan's canonicalized form — EXACTLY CacheManager's match
+  * granularity — and refcounted across threads: a scope close
+  * decrements, and only the LAST scope out releases. A persist and a
+  * checkpoint of one plan are separate entries.
   *
   * Already-persisted EXTERNAL inputs (e.g. a warmed service-mode
   * table passed straight into an operator) still pass through
@@ -43,14 +43,16 @@ import scala.collection.mutable.ArrayBuffer
   */
 object CacheScope {
 
-  private type Key = (Int, LogicalPlan)
+  /** (session, canonicalized analyzed plan, is a checkpoint) */
+  private type Key = (Int, LogicalPlan, Boolean)
 
-  private final class Entry(val owner: DataFrame) {
-    var refs: Int = 0
+  private final class Entry(val owner: DataFrame, val release: () => Unit) {
+    var refs: Int = 1
     /** one representative DataFrame per output-name vector, so
       * same-named callers share an object and differently-aliased
       * callers are never handed columns they cannot resolve */
-    val byNames: mutable.Map[Seq[String], DataFrame] = mutable.Map.empty
+    val byNames: mutable.Map[Seq[String], DataFrame] =
+      mutable.Map(owner.schema.fieldNames.toSeq -> owner)
   }
 
   private val entries = new java.util.HashMap[Key, Entry]()
@@ -59,87 +61,119 @@ object CacheScope {
     override def initialValue(): ArrayBuffer[Key] = ArrayBuffer.empty
   }
 
-  /** Nesting depth of withScope on this thread — persist() outside any
-    * scope must NOT register (nothing would ever drain the record:
-    * round-5 advice item — direct operator/test/notebook use leaked a
-    * map entry and pinned the cache for session life). */
+  /** Nesting depth of withScope on this thread. A cache taken outside
+    * any scope must NOT register: only withScope drains the record, so
+    * an entry made here would pin the cache for the session's life. */
   private val depth = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
 
-  private def keyOf(df: DataFrame): Key =
+  private def keyOf(df: DataFrame, checkpointed: Boolean): Key =
     (System.identityHashCode(df.sparkSession),
-      df.queryExecution.analyzed.canonicalized)
+      df.queryExecution.analyzed.canonicalized, checkpointed)
 
   /** Persist `df` (or adopt the live cache of a plan-equal DataFrame
     * another scope persisted) and register it with the current
-    * thread's scope. */
+    * thread's scope. Outside any scope nothing is registered and the
+    * lifetime is the caller's to manage (df.unpersist()). */
   def persist(df: DataFrame,
               level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    // No scope active: persist for the caller but register NOTHING —
-    // the thread-local buffer is only drained by withScope, so a
-    // record here would leak and pin the cache for session life
-    // (round-5 advice item). Lifetime is the caller's to manage
-    // (df.unpersist()).
-    //
-    // Ordering hazard (round-6 advice): if a LIVE SCOPED entry already
-    // caches this plan, `df.storageLevel` reads non-NONE (Spark's
-    // lookup is plan-keyed, not object-keyed), so a plain early-return
-    // would hand the scopeless caller a cache that silently vanishes
-    // when that scope closes. Taking a permanent reference on the
-    // entry instead gives the scopeless caller the session lifetime
-    // scopeless persist has always meant — the entry stays live after
-    // every scope closes, exactly as if the scopeless persist had won
-    // the race and run first (that order already pins for session
-    // life via the pass-through branch below).
-    if (depth.get() == 0) {
-      entries.synchronized {
-        val existing = entries.get(keyOf(df))
-        if (existing != null) {
-          existing.refs += 1 // never decremented: session-lifetime pin
-          return existing.byNames.getOrElseUpdate(df.schema.fieldNames.toSeq, df)
-        }
-      }
-      if (df.storageLevel == StorageLevel.NONE) df.persist(level)
-      return df
-    }
-    val key = keyOf(df)
-    val names = df.schema.fieldNames.toSeq
+    val key = keyOf(df, checkpointed = false)
+    val scoped = depth.get() > 0
     entries.synchronized {
-      val existing = entries.get(key)
-      // ORDER MATTERS, and it is the reverse of what a naive external-
-      // cache guard would do: Spark's `df.storageLevel` is PLAN-KEYED
-      // (CacheManager lookup by canonicalized plan, not object), so
-      // while a scoped entry is live, a sibling's FRESH plan-equal
-      // DataFrame also reports a non-NONE storageLevel. Checking
-      // storageLevel before the entry map would therefore bounce every
-      // legitimate adoption (measured: the CacheScopeSpec refcount race
-      // re-appears). A genuinely caller-managed cache persisted BEFORE
-      // any scope entry exists still passes through untouched below —
-      // and one persisted AFTER a plan-equal scoped entry was already a
-      // CacheManager no-op ("already cached"), so the shared-entry
-      // lifetime hazard lives in Spark's plan-keyed cache itself, not
-      // in this refcount.
-      if (existing != null) {
-        existing.refs += 1
-        reg.get() += key
-        existing.byNames.getOrElseUpdate(names, df)
-      } else if (df.storageLevel != StorageLevel.NONE) {
-        df // externally cached (warm table / caller-managed): hands off
-      } else {
-        df.persist(level)
-        val e = new Entry(df)
-        e.refs = 1
-        e.byNames(names) = df
-        entries.put(key, e)
-        reg.get() += key
-        df
+      // The entry map is consulted BEFORE `df.storageLevel`: Spark's
+      // cache lookup is plan-keyed, not object-keyed, so while a scoped
+      // entry is live a fresh plan-equal DataFrame also reports a
+      // non-NONE storageLevel. Checking that first would bounce every
+      // legitimate adoption (the CacheScopeSpec refcount race), and
+      // would hand a scopeless caller a cache that vanishes when the
+      // scope closes. A scopeless caller instead takes a reference it
+      // never returns: the session lifetime a scopeless persist means.
+      // A caller-managed cache persisted before any scope entry exists
+      // passes through untouched.
+      Option(entries.get(key)) match {
+        case Some(e) =>
+          e.refs += 1
+          if (scoped) reg.get() += key
+          e.byNames.getOrElseUpdate(df.schema.fieldNames.toSeq, df)
+        case None if df.storageLevel != StorageLevel.NONE => df
+        case None =>
+          df.persist(level)
+          if (scoped) {
+            entries.put(key, new Entry(df, () => df.unpersist(false)))
+            reg.get() += key
+          }
+          df
       }
+    }
+  }
+
+  /** The width of a hashed layout; the rule is stated at [[checkpoint]]. */
+  private def width(s: SparkSession): Int =
+    math.min(s.sparkContext.defaultParallelism, s.sessionState.conf.numShufflePartitions)
+
+  /** The one primitive for a loop-stable relation (a standing layout
+    * every round joins against) and for a loop's lineage cut: a LAZY
+    * local checkpoint of `df`, first hashed on `hashOn` when given.
+    *
+    * Why a checkpoint and not [[persist]]: the result is a `LogicalRDD`
+    * that keeps the plan's `outputPartitioning`, so each round's join
+    * on the hash key reuses the layout instead of re-exchanging it. A
+    * persisted layout compiles to its own AdaptiveSparkPlan and the
+    * consumer re-shuffles it. Measured on the PageRank setup shape
+    * (Spark 4.1.2, bench confs, `local[4]`,
+    * `autoBroadcastJoinThreshold=-1`): a persisted layout has its edge
+    * side re-exchanged once per round, 2 exchanges at 2 rounds and 6
+    * at 6; the checkpointed layout stays at 2 (CacheScopeSpec). A cut
+    * also keeps the plan size constant across rounds, so the driver
+    * does not re-analyse an unrolled tree on every action.
+    *
+    * Width: one partition per core, capped at `numShufflePartitions`.
+    * An explicit `repartition(n, …)` is exempt from AQE coalescing, and
+    * under the bench confs `numShufflePartitions` is
+    * `initialPartitionNum` = 8×cores, so that width froze every layout,
+    * and every round joining against it, at 8 tasks per core. The
+    * width does not grow with the input: a layout whose per-core share
+    * outgrows executor memory spills. Logical stats cannot size it,
+    * since the layouts hold derived edge lists whose join estimates
+    * multiply.
+    *
+    * Lifetime: inside [[withScope]] the result is registered like a
+    * persist — plan-keyed and refcounted, so a plan-equal layout built
+    * twice in one scope is built once — and its blocks are unpersisted
+    * when the last scope holding it closes. A DataFrame built on it
+    * must therefore run inside the scope that built it. Outside any
+    * scope the ContextCleaner frees the blocks once the result is
+    * unreachable. The blocks live in executor storage only and do NOT
+    * survive executor loss: a lost executor fails the query instead of
+    * recomputing the cut. */
+  def checkpoint(df: DataFrame, hashOn: Column*): DataFrame = {
+    val laid = if (hashOn.isEmpty) df else df.repartition(width(df.sparkSession), hashOn: _*)
+    if (depth.get() == 0) return laid.localCheckpoint(false)
+    val key = keyOf(laid, checkpointed = true)
+    val names = laid.schema.fieldNames.toSeq
+    def adopt() = entries.synchronized(Option(entries.get(key)).map { e =>
+      e.refs += 1
+      reg.get() += key
+      e.byNames.getOrElseUpdate(names, e.owner.toDF(names: _*))
+    })
+    adopt().getOrElse {
+      // built outside the lock: under AQE the call already runs the
+      // plan's shuffle stages
+      val cut = laid.localCheckpoint(false)
+      val rdd = cut.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+      entries.synchronized(adopt() match {
+        case Some(shared) => rdd.unpersist(false); shared // another scope won the race
+        case None =>
+          entries.put(key, new Entry(cut, () => rdd.unpersist(false)))
+          reg.get() += key
+          cut
+      })
     }
   }
 
   /** Run `body` (build a DataFrame AND execute its action), then
     * release every cache `body` registered on this thread; an entry is
-    * actually unpersisted only when no other in-flight scope still
-    * holds it. */
+    * actually released only when no other in-flight scope still holds
+    * it. */
   def withScope[T](body: => T): T = {
     val buf = reg.get()
     val before = buf.length
@@ -156,7 +190,7 @@ object CacheScope {
             e.refs -= 1
             if (e.refs <= 0) {
               entries.remove(key)
-              e.owner.unpersist(false)
+              e.release()
             }
           }
         }

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Guard against FILE-BOUND parallelism starvation ahead of
   * compute-heavy stages: a scan's partition count is set by input
@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * files.maxPartitionBytes` — pure logical-plan statistics, the same
   * inputs Spark's own FilePartition packer uses, so probing never
   * instantiates an RDD lineage or (under AQE) eagerly materializes an
-  * upstream exchange the way `df.rdd.getNumPartitions` would (round-5
-  * advice item). The estimate ignores per-file open cost, so it can
+  * upstream exchange the way `df.rdd.getNumPartitions` would. The
+  * estimate ignores per-file open cost, so it can
   * UNDERcount splits on many-tiny-file inputs and repartition a frame
   * that already had enough splits — the safe direction here, since
   * Spread only wraps compute-dominant stages where the input is small
@@ -43,8 +43,8 @@ object Spread {
     * planning — no job, no RDD lineage, no eager AQE stage
     * materialization.
     *
-    * Stats can miss in BOTH directions (round-6 advice): a leaf that
-    * falls back to `spark.sql.defaultSizeInBytes` (= Long.MaxValue
+    * Stats can miss in BOTH directions: a leaf that falls back to
+    * `spark.sql.defaultSizeInBytes` (= Long.MaxValue
     * unless CBO overrides it) or a join whose size estimate is the
     * PRODUCT of its inputs reports absurdly large bytes, which would
     * read as "plenty of splits" and silently suppress the repartition
@@ -55,41 +55,14 @@ object Spread {
     * starvation-safe direction: Spread only wraps compute-dominant
     * stages where one extra exchange is noise). */
   def estimatedPartitions(df: DataFrame): Long = {
+    val conf = df.sparkSession.sessionState.conf
     val declared = df.queryExecution.sparkPlan.outputPartitioning.numPartitions.toLong
     val rawBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val unknownAt = BigInt(
-      df.sparkSession.conf.get("spark.sql.defaultSizeInBytes",
-        Long.MaxValue.toString))
-    val bytes = if (rawBytes >= unknownAt) BigInt(0) else rawBytes
-    val maxSplit = BigInt(
-      df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        .replaceAll("(?i)b$", "") match {
-        case s if s.toLowerCase.endsWith("k") => s.dropRight(1).toLong << 10
-        case s if s.toLowerCase.endsWith("m") => s.dropRight(1).toLong << 20
-        case s if s.toLowerCase.endsWith("g") => s.dropRight(1).toLong << 30
-        case s => s.toLong
-      })
+    val bytes = if (rawBytes >= conf.defaultSizeInBytes) BigInt(0) else rawBytes
+    val maxSplit = BigInt(conf.filesMaxPartitionBytes)
     val est = (bytes + maxSplit - 1) / maxSplit
-    val byStats =
-      if (est < 1) 1L
-      else if (est > Int.MaxValue) Int.MaxValue.toLong
-      else est.toLong
-    math.max(declared, byStats)
+    math.max(declared, est.max(1).min(Int.MaxValue).toLong)
   }
-
-  /** Partition count for an explicit-width standing layout (a
-    * loop-stable relation hashed once on its join key and reused every
-    * round): one partition per core, capped at the session's
-    * `numShufflePartitions`. An explicit `repartition(n, ...)` is exempt
-    * from AQE coalescing, and under the bench confs
-    * `numShufflePartitions` is `initialPartitionNum` = 8×cores, so reading
-    * it directly froze every standing layout, and every round that joins
-    * against it, at 8 tasks per core on inputs of any size. Limit: the
-    * count does not grow with the input, so a layout whose per-core share
-    * outgrows executor memory spills; logical stats cannot size it, since
-    * the layouts hold derived edge lists whose join estimates multiply. */
-  def layoutPartitions(s: SparkSession): Int =
-    math.min(s.sparkContext.defaultParallelism, s.sessionState.conf.numShufflePartitions)
 
   def apply(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

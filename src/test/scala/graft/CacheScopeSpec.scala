@@ -1,8 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
+import graft.operators.{ConnectedComponents, Graph}
 import graft.util.CacheScope
+import scala.jdk.CollectionConverters._
 
 /** CacheScope refcounting invariants (round-5 fix): two concurrent
   * scopes persisting LOGICALLY IDENTICAL plans share one cache entry,
@@ -11,7 +20,8 @@ import graft.util.CacheScope
   * Verify dump overlapped q_breusch_pagan's (both persist the same
   * daily-revenue series; Spark's CacheManager plan-matches them onto
   * one entry, so the old per-thread unconditional unpersist dropped
-  * it under a sibling mid-flight query).
+  * it under a sibling mid-flight query). The same entries hold the
+  * standing layouts and lineage cuts of `CacheScope.checkpoint`.
   */
 class CacheScopeSpec extends AnyFunSuite {
   import TestSpark._
@@ -106,5 +116,82 @@ class CacheScopeSpec extends AnyFunSuite {
     try assert(outside.storageLevel != StorageLevel.NONE,
       "the scoped entry's close must not drop a cache a scopeless caller adopted")
     finally outside.unpersist(true)
+  }
+
+  /** Shuffles whose input is a stored relation (a cache or a
+    * checkpoint) read as is: the re-exchanges of a standing layout. */
+  private def layoutExchanges(df: DataFrame): Int = {
+    def stored(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec | _: RDDScanExec => true
+      case t: TableCacheQueryStageExec => stored(t.plan)
+      case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec |
+           _: InputAdapter | _: ColumnarToRowExec => stored(p.children.head)
+      case _ => false
+    }
+    df.collect() // settles the final adaptive plan
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: ShuffleExchangeExec if stored(s.child) => s
+    }.size
+  }
+
+  private def rddIdOf(df: DataFrame): Int =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }.get
+
+  test("the exchanges of a PageRank layout do not grow with the round count") {
+    import spark.implicits._
+    val edges = (0 until 40).flatMap(i => Seq((i, (i + 1) % 40), (i, (i * 7) % 40)))
+      .toDF("s", "d").where($"s" =!= $"d")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val counts = Seq(2, 8).map(n =>
+        CacheScope.withScope(layoutExchanges(Graph.pageRank(edges, "s", "d", n))))
+      info(s"layout exchanges at 2 and 8 rounds: ${counts.mkString(", ")}")
+      assert(counts(0) == counts(1),
+        s"layout re-exchanged per round: ${counts(0)} at 2 rounds, ${counts(1)} at 8")
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("a scope releases the checkpoints of connected components") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L)).toDF("a", "b")
+    val rows = CacheScope.withScope {
+      ConnectedComponents.labelPropagation(edges, "a", "b").collect()
+    }
+    assert(rows.length == 7)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs still persisted after the scope closed: $left")
+  }
+
+  test("a plan-equal layout built twice in one scope is built once") {
+    val sc = spark.sparkContext
+    val id = CacheScope.withScope {
+      val a = CacheScope.checkpoint(plan(), col("k"))
+      val b = CacheScope.checkpoint(plan(), col("k"))
+      assert(rddIdOf(a) == rddIdOf(b))
+      assert(b.collect().length == 2)
+      rddIdOf(a)
+    }
+    assert(!sc.getPersistentRDDs.contains(id), "the last scope out must release the layout")
+  }
+
+  test("localCheckpoint and the layout width live only in CacheScope") {
+    // the single-primitive rule, pinned the way SessionConfSpec pins the
+    // single conf source
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/util/CacheScope.scala")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders = try {
+      stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p != owner)
+        .filter { p =>
+          val text = java.nio.file.Files.readString(p)
+          text.contains("localCheckpoint(") || text.contains("layoutPartitions")
+        }.map(root.relativize(_).toString).toList
+    } finally stream.close()
+    assert(offenders.isEmpty, s"use CacheScope.checkpoint instead in: $offenders")
   }
 }

@@ -2,18 +2,35 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Registry
+import graft.util.CacheScope
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Smoke + invariants for every bound query at sf0.001. */
 class RegistrySpec extends AnyFunSuite {
   import TestSpark._
 
   test("all queries run and produce sane schemas") {
-    Registry.allQueries.foreach { q =>
-      val df = q.run(spark, sfTiny)
-      assert(df.schema.fields.nonEmpty, s"${q.name}: empty schema")
-      val n = df.count()
-      assert(n >= 0, s"${q.name}: count failed")
-    }
+    // four at a time on a fixed pool, each in its own scope, as Verify
+    // runs them: a query's caches and checkpoints are released when it
+    // finishes, and a query that reads a released one fails here
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val failures = try {
+      val runs = Registry.allQueries.map { q =>
+        Future {
+          try CacheScope.withScope {
+            val df = q.run(spark, sfTiny)
+            if (df.schema.fields.isEmpty) Some(s"${q.name}: empty schema")
+            else if (df.count() < 0) Some(s"${q.name}: count failed")
+            else None
+          } catch { case e: Throwable => Some(s"${q.name}: $e") }
+        }
+      }
+      Await.result(Future.sequence(runs), Duration.Inf).flatten
+    } finally pool.shutdown()
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("query names are unique and every oracle key has a query") {

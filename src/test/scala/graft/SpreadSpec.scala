@@ -48,4 +48,16 @@ class SpreadSpec extends AnyFunSuite {
       "stats-unknown single-partition input must still be spread")
     assert(out.agg(org.apache.spark.sql.functions.sum("x")).head.getLong(0) == 5050L)
   }
+
+  test("reads maxPartitionBytes in any Spark byte unit") {
+    // `1t` is a valid size for spark.sql.files.maxPartitionBytes; the
+    // estimate reads the session's parsed value, not the raw string
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1t")
+    try {
+      val df = (1 to 100).toDF("x").coalesce(1)
+      assert(Spread.estimatedPartitions(df) == 1L)
+    } finally spark.conf.set(key, saved)
+  }
 }
