@@ -58,8 +58,6 @@ object ConnectedComponents {
     // shuffles for one.
     val adj = CacheScope.checkpoint(
       e.union(e.select(col("b").as("a"), col("a").as("b"))).distinct(), col("b"))
-    var labels = CacheScope.checkpoint(
-      adj.select(col("a").as("id")).distinct().withColumn("label", col("id")))
     // Convergence probe: labels are NON-INCREASING per node (min of
     // self and neighbors, then a shortcut that only ever jumps toward
     // the component min), so Σ label is strictly decreasing until the
@@ -71,29 +69,25 @@ object ConnectedComponents {
     // (every node id null, or a non-ANSI decimal overflow) has no
     // fixpoint to detect and fails here instead of reading as
     // "converged".
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
+    def labelSum(df: DataFrame): BigInt = {
       val r = df.agg(count(lit(1)), sum(col("label").cast("decimal(38,0)"))).first()
-      if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
-      else Option(r.getDecimal(1)).getOrElse(throw new IllegalArgumentException(
-        s"ConnectedComponents: label sum is null over ${r.getLong(0)} nodes " +
-          "(null node ids, or decimal overflow with ANSI mode off)"))
+      if (r.getLong(0) == 0L) BigInt(0)
+      else Option(r.getDecimal(1)).map(d => BigInt(d.toBigInteger)).getOrElse(
+        throw new IllegalArgumentException(
+          s"ConnectedComponents: label sum is null over ${r.getLong(0)} nodes " +
+            "(null node ids, or decimal overflow with ANSI mode off)"))
     }
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // TWO rounds per blocking job (the pageRankUntil segment
-      // pattern): rounds inside a segment unroll lazily and
-      // materialize together in the probe's job, halving the
-      // sequential job count the loop pays — on the q_dbscan ε-graph
-      // (16 rounds to converge) 8 blocking jobs instead of 16.
-      // Convergence across a segment is still exact: the sum
-      // is monotone per ROUND, so segment-sum unchanged ⟺ both rounds
-      // were the identity ⟺ fixpoint.
-      val steps = math.min(2, maxIter - iter)
-      // the segment materializes inside the sum probe's job and is the
-      // standing input of the next segment
-      val next = CacheScope.checkpoint((1 to steps).foldLeft(labels) { (seg, _) =>
+    // TWO rounds per segment, one blocking job each (the pageRankUntil
+    // segment pattern): rounds inside a segment unroll lazily and
+    // materialize together in the probe's job, halving the sequential
+    // job count the loop pays — on the q_dbscan ε-graph (16 rounds to
+    // converge) 8 blocking jobs instead of 16. Convergence across a
+    // segment is still exact: the sum is monotone per ROUND, so
+    // segment-sum unchanged ⟺ both rounds were the identity ⟺ fixpoint.
+    val (labels, segments, converged) = Graph.cutLoop(
+        adj.select(col("a").as("id")).distinct().withColumn("label", col("id")),
+        (maxIter + 1) / 2, Some(labelSum)) { (cur, done) =>
+      (1 to math.min(2, maxIter - 2 * done)).foldLeft(cur) { (seg, _) =>
         // min label among neighbors, then min with own label — as ONE
         // aggregation over the union of neighbor labels and own labels
         // (min over the union ≡ least(own, coalesce(nbrMin, own)); a
@@ -113,13 +107,9 @@ object ConnectedComponents {
         stepped.join(roots, stepped("label") === roots("rid"), "left")
           .select(stepped("id"),
             least(stepped("label"), coalesce(col("rlabel"), stepped("label"))).as("label"))
-      })
-      val curSum = labelSum(next)
-      labels = next
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      iter += steps
+      }
     }
+    val iter = math.min(2 * segments, maxIter)
     org.slf4j.LoggerFactory.getLogger(getClass)
       .info(s"labelPropagation: $iter rounds, converged=$converged")
     if (!converged) {

@@ -136,9 +136,10 @@ object Graph {
     * and final rounds are cut with [[CacheScope.checkpoint]], so the
     * final round and the residual read share the penultimate one, and
     * the next segment builds on a materialized cut instead of
-    * re-deriving the unroll). The
-    * probe itself is a driver-side 1-row aggregate — the same
-    * node-keyed join every round already does, nothing extra shuffles.
+    * re-deriving the unroll; the segment's earlier cuts are then
+    * released). The probe itself is a driver-side 1-row aggregate —
+    * the same node-keyed join every round already does, nothing extra
+    * shuffles.
     * Worst case (never converges) this runs `maxIters` rounds in
     * ceil(maxIters/checkEvery) jobs — same total work as the fixed
     * unroll, plus one k-row probe per segment.
@@ -172,6 +173,8 @@ object Graph {
         .first().getLong(0)
       residual = (BigInt(linf) * 1000000 / scale).toLong
       itersRun += steps
+      CacheScope.supersede(prev, pCp)
+      CacheScope.supersede(pCp, cur)
       prev = cur
     }
     (prev, itersRun, residual)
@@ -296,35 +299,40 @@ object Graph {
     val e = CacheScope.persist(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     cutLoop(sources.select(col(sourceCol).as("node")).distinct().withColumn("hop", lit(0L)),
-        maxHops, probe = true) { labels =>
+        maxHops, Some(_.count())) { (labels, _) =>
       labels.union(e.join(labels, e("src") === labels("node"))
           .select(col("dst").as("node"), (col("hop") + 1).as("hop")))
         .groupBy("node").agg(min(col("hop")).as("hop"))
-    }
+    }._1
   }
 
   /** Runs `round` from `start` for at most `maxRounds` rounds, cutting
-    * the start and every round's result with [[CacheScope.checkpoint]].
-    * With `probe` the loop stops after a round that leaves the row count
-    * unchanged: one job per round materializes the cut and counts it,
-    * and the previous round's count is carried, not re-run. Without it
-    * the cuts materialize inside the caller's final job. */
-  private def cutLoop(start: DataFrame, maxRounds: Int, probe: Boolean)(
-      round: DataFrame => DataFrame): DataFrame = {
+    * the start and every round's result with [[CacheScope.checkpoint]];
+    * `round` also gets the number of rounds already run. With a `probe`
+    * the loop stops after a round that leaves the probe's value
+    * unchanged: one job per round materializes the cut and probes it,
+    * the previous value is carried, not re-run, and the previous cut
+    * is released. Without one the cuts materialize inside the caller's
+    * final job and are held until the scope closes. Returns the last
+    * cut, the rounds run and whether the probe saw a fixpoint. */
+  private[operators] def cutLoop(start: DataFrame, maxRounds: Int, probe: Option[DataFrame => Any])(
+      round: (DataFrame, Int) => DataFrame): (DataFrame, Int, Boolean) = {
     var cur = CacheScope.checkpoint(start)
-    var size = if (probe) cur.count() else 0L
+    var seen = probe.map(_(cur))
     var rounds = 0
     var stable = false
     while (!stable && rounds < maxRounds) {
-      cur = CacheScope.checkpoint(round(cur))
-      if (probe) {
-        val n = cur.count()
-        stable = n == size
-        size = n
+      val next = CacheScope.checkpoint(round(cur, rounds))
+      probe.foreach { p =>
+        val now = Some(p(next))
+        stable = now == seen
+        seen = now
+        CacheScope.supersede(cur, next)
       }
+      cur = next
       rounds += 1
     }
-    cur
+    (cur, rounds, stable)
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop nodes
@@ -355,17 +363,14 @@ object Graph {
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             maxRounds: Int = Int.MaxValue): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val alive = cutLoop(edges.select(col(aCol).as("a"), col(bCol).as("b")),
-        maxRounds, probe = maxRounds == Int.MaxValue) { alive =>
-      val keep = alive.select(col("a").as("node"))
-        .union(alive.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select("node")
+    def degrees(e: DataFrame) = e.select(col("a").as("node"))
+      .union(e.select(col("b").as("node"))).groupBy("node").agg(count(lit(1)).as("deg"))
+    degrees(cutLoop(edges.select(col(aCol).as("a"), col(bCol).as("b")), maxRounds,
+        if (maxRounds == Int.MaxValue) Some(_.count()) else None) { (alive, _) =>
+      val keep = degrees(alive).where(col("deg") >= k).select("node")
       alive
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-    }
-    alive.select(col("a").as("node")).union(alive.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    }._1)
   }
 }

@@ -688,11 +688,10 @@ object GraphQueries {
     * hub needs the df-cap treatment before round 3). Top-50 via
     * TakeOrdered, never a global sort. */
   private val qKatz = BoundQuery("q_katz", (s, d) => {
-    // the walk recurrence references the edge relation three times,
-    // each time joining on `src`: one standing layout hashed on it
-    // (unpinned, each w_k re-scanned the fact table and re-shuffled
-    // the distinct)
-    val edges = graft.util.CacheScope.checkpoint(encEdges(s, d), col("src"))
+    // the walk recurrence references the edge relation three times:
+    // cut it once (unpinned, each w_k re-scanned the fact table and
+    // re-shuffled the distinct)
+    val edges = graft.util.CacheScope.checkpoint(encEdges(s, d))
     val w1 = edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("w1"))
     val w2 = edges.join(w1.withColumnRenamed("node", "src"), "src")
       .groupBy(col("dst").as("node")).agg(sum(col("w1")).as("w2"))

@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
@@ -33,7 +34,8 @@ import scala.collection.mutable.ArrayBuffer
   * analyzed plan's canonicalized form — EXACTLY CacheManager's match
   * granularity — and refcounted across threads: a scope close
   * decrements, and only the LAST scope out releases. A persist and a
-  * checkpoint of one plan are separate entries.
+  * layout of one plan are separate entries; a cut is never shared
+  * ([[checkpoint]]).
   *
   * Already-persisted EXTERNAL inputs (e.g. a warmed service-mode
   * table passed straight into an operator) still pass through
@@ -43,8 +45,12 @@ import scala.collection.mutable.ArrayBuffer
   */
 object CacheScope {
 
-  /** (session, canonicalized analyzed plan, is a checkpoint) */
-  private type Key = (Int, LogicalPlan, Boolean)
+  private sealed trait Key
+  /** A persist or a hashed layout, shared by plan: the session and the
+    * canonicalized analyzed plan — CacheManager's match granularity. */
+  private final case class Planned(session: Int, plan: LogicalPlan, layout: Boolean) extends Key
+  /** A cut, keyed by its own RDD and never shared. */
+  private final case class Cut(rdd: RDD[_]) extends Key
 
   private final class Entry(val owner: DataFrame, val release: () => Unit) {
     var refs: Int = 1
@@ -66,9 +72,20 @@ object CacheScope {
     * an entry made here would pin the cache for the session's life. */
   private val depth = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
 
-  private def keyOf(df: DataFrame, checkpointed: Boolean): Key =
-    (System.identityHashCode(df.sparkSession),
-      df.queryExecution.analyzed.canonicalized, checkpointed)
+  private def keyOf(df: DataFrame, layout: Boolean): Key = Planned(
+    System.identityHashCode(df.sparkSession), df.queryExecution.analyzed.canonicalized, layout)
+
+  /** The RDD of a checkpoint's result, or None when `df` is not one. */
+  private def rddOf(df: DataFrame): Option[RDD[_]] =
+    Some(df.queryExecution.logical).collect { case r: LogicalRDD => r.rdd }
+
+  /** Adds an entry to the map and to this thread's scope; call under
+    * the map's lock. */
+  private def register(key: Key, owner: DataFrame)(release: => Unit): DataFrame = {
+    entries.put(key, new Entry(owner, () => release))
+    reg.get() += key
+    owner
+  }
 
   /** Persist `df` (or adopt the live cache of a plan-equal DataFrame
     * another scope persisted) and register it with the current
@@ -76,7 +93,7 @@ object CacheScope {
     * lifetime is the caller's to manage (df.unpersist()). */
   def persist(df: DataFrame,
               level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val key = keyOf(df, checkpointed = false)
+    val key = keyOf(df, layout = false)
     val scoped = depth.get() > 0
     entries.synchronized {
       // The entry map is consulted BEFORE `df.storageLevel`: Spark's
@@ -97,11 +114,7 @@ object CacheScope {
         case None if df.storageLevel != StorageLevel.NONE => df
         case None =>
           df.persist(level)
-          if (scoped) {
-            entries.put(key, new Entry(df, () => df.unpersist(false)))
-            reg.get() += key
-          }
-          df
+          if (scoped) register(key, df)(df.unpersist(false)) else df
       }
     }
   }
@@ -136,39 +149,55 @@ object CacheScope {
     * since the layouts hold derived edge lists whose join estimates
     * multiply.
     *
-    * Lifetime: inside [[withScope]] the result is registered like a
-    * persist — plan-keyed and refcounted, so a plan-equal layout built
-    * twice in one scope is built once — and its blocks are unpersisted
-    * when the last scope holding it closes. A DataFrame built on it
-    * must therefore run inside the scope that built it. Outside any
-    * scope the ContextCleaner frees the blocks once the result is
-    * unreachable. The blocks live in executor storage only and do NOT
-    * survive executor loss: a lost executor fails the query instead of
+    * Lifetime: inside [[withScope]] the result is registered with the
+    * scope, and its blocks are unpersisted when the last scope holding
+    * it closes, so a DataFrame built on it must run inside the scope
+    * that built it. A hashed layout is plan-keyed and refcounted like a
+    * persist: a plan-equal layout built twice in one scope is built
+    * once. A cut (no `hashOn`) is registered by identity and never
+    * shared: each round's plan holds the previous cut, so a rebuilt
+    * loop in the same scope (a bench's timed rerun) would otherwise
+    * replay the stored rounds instead of running them. A loop releases
+    * a cut early with [[supersede]]. Outside any scope the
+    * ContextCleaner frees the blocks once the result is unreachable.
+    * The blocks live in executor storage only and do NOT survive
+    * executor loss: a lost executor fails the query instead of
     * recomputing the cut. */
   def checkpoint(df: DataFrame, hashOn: Column*): DataFrame = {
     val laid = if (hashOn.isEmpty) df else df.repartition(width(df.sparkSession), hashOn: _*)
     if (depth.get() == 0) return laid.localCheckpoint(false)
-    val key = keyOf(laid, checkpointed = true)
+    lazy val key = keyOf(laid, layout = true)
     val names = laid.schema.fieldNames.toSeq
-    def adopt() = entries.synchronized(Option(entries.get(key)).map { e =>
-      e.refs += 1
-      reg.get() += key
-      e.byNames.getOrElseUpdate(names, e.owner.toDF(names: _*))
-    })
+    // a cut is never adopted
+    def adopt() = if (hashOn.isEmpty) None else entries.synchronized(
+      Option(entries.get(key)).map { e =>
+        e.refs += 1
+        reg.get() += key
+        e.byNames.getOrElseUpdate(names, e.owner.toDF(names: _*))
+      })
     adopt().getOrElse {
       // built outside the lock: under AQE the call already runs the
       // plan's shuffle stages
-      val cut = laid.localCheckpoint(false)
-      val rdd = cut.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+      val built = laid.localCheckpoint(false)
+      val rdd = rddOf(built).get
       entries.synchronized(adopt() match {
         case Some(shared) => rdd.unpersist(false); shared // another scope won the race
-        case None =>
-          entries.put(key, new Entry(cut, () => rdd.unpersist(false)))
-          reg.get() += key
-          cut
+        case None => register(if (hashOn.isEmpty) Cut(rdd) else key, built)(rdd.unpersist(false))
       })
     }
   }
+
+  /** Releases the scoped cut `old` once `next`, a later cut of the same
+    * loop, has been materialized: a materialized cut reads its own
+    * blocks, not its input's, so the scope need hold only a loop's
+    * latest cut instead of one per round. Does nothing while `next` is
+    * unmaterialized (it still reads `old`), or when `old` is not a cut
+    * registered in a scope; the scope close or the ContextCleaner then
+    * releases it. */
+  def supersede(old: DataFrame, next: DataFrame): Unit =
+    if (rddOf(next).exists(_.isCheckpointed)) rddOf(old).foreach { rdd =>
+      entries.synchronized(Option(entries.remove(Cut(rdd)))).foreach(_.release())
+    }
 
   /** Run `body` (build a DataFrame AND execute its action), then
     * release every cache `body` registered on this thread; an entry is
@@ -186,6 +215,7 @@ object CacheScope {
       entries.synchronized {
         mine.foreach { key =>
           val e = entries.get(key)
+          // null: a loop already released this cut early (supersede)
           if (e != null) {
             e.refs -= 1
             if (e.refs <= 0) {

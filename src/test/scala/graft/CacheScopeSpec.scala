@@ -178,6 +178,39 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(!sc.getPersistentRDDs.contains(id), "the last scope out must release the layout")
   }
 
+  test("a cut is never shared, so a rebuilt loop in one scope runs again") {
+    val sc = spark.sparkContext
+    val ids = CacheScope.withScope {
+      val a = CacheScope.checkpoint(plan())
+      val b = CacheScope.checkpoint(plan())
+      assert(b.collect().length == 2)
+      Seq(rddIdOf(a), rddIdOf(b))
+    }
+    assert(ids.distinct.size == 2, s"plan-equal cuts share RDD ${ids.head}")
+    assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)), "the scope must release both cuts")
+  }
+
+  test("a probed loop holds only its latest cut while its scope is open") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // RDDs persisted by `run` and still persisted when it returns
+    def held(run: => Long): Int = CacheScope.withScope {
+      val before = sc.getPersistentRDDs.keySet
+      assert(run > 0)
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    val chain = (0L until 24L).map(i => (i, i + 1)).toDF("a", "b")
+    val ring = (0 until 12).map(i => (i, (i + 1) % 12)).toDF("s", "d")
+      .union((0 until 12).map(i => (i, (i * 5) % 12)).toDF("s", "d").where($"s" =!= $"d"))
+    // the edge persist and the last round's cut
+    assert(held(Graph.bfsHops(chain, "a", "b", Seq(0L).toDF("n"), "n", 30).count()) == 2)
+    // the adjacency layout and the last segment's labels
+    assert(held(ConnectedComponents.labelPropagation(chain, "a", "b").count()) == 2)
+    // the edge persist, the two PageRank layouts and the last round's cut
+    assert(held(Graph.pageRankUntil(ring, "s", "d", residualPpm = 0L, maxIters = 6,
+      checkEvery = 1)._1.count()) == 4)
+  }
+
   test("localCheckpoint and the layout width live only in CacheScope") {
     // the single-primitive rule, pinned the way SessionConfSpec pins the
     // single conf source
