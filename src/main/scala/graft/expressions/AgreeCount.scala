@@ -75,10 +75,8 @@ case class AgreeCount(left: Expression, right: Expression)
 }
 
 object AgreeCount {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("agree_count", exprs => AgreeCount(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def agreeCount(spark: SparkSession, a: Column, b: Column): Column =
     face.column(spark, a, b)

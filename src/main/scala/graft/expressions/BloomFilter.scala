@@ -142,9 +142,9 @@ case class BloomMightContain(left: Expression, right: Expression, numHashes: Int
 }
 
 object BloomFilter {
-  private val aggFace = new FnRegistry("bloom_agg",
+  private[expressions] val aggFace = new FnRegistry("bloom_agg",
     exprs => BloomFilterAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression())
-  private val containsFace = new FnRegistry("bloom_might_contain",
+  private[expressions] val containsFace = new FnRegistry("bloom_might_contain",
     exprs => {
       val k = exprs(2) match {
         case Literal(v: Int, IntegerType) => v
@@ -152,11 +152,6 @@ object BloomFilter {
       }
       BloomMightContain(exprs(0), exprs(1), k)
     })
-
-  def register(spark: SparkSession): Unit = {
-    aggFace.register(spark)
-    containsFace.register(spark)
-  }
 
   def bloomAgg(spark: SparkSession, key: Column, numBits: Int, numHashes: Int): Column =
     aggFace.column(spark, key, org.apache.spark.sql.functions.lit(numBits),

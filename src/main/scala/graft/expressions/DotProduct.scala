@@ -98,10 +98,8 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("dot_product", exprs => DotProduct(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def dotProduct(spark: SparkSession, a: Column, b: Column): Column =
     face.column(spark, a, b)

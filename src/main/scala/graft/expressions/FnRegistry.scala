@@ -3,17 +3,14 @@ package graft.expressions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Once-per-session temp-function registration + Column face, shared
-  * by the native expression objects (round-8 review: DotProduct,
-  * SignSig63, SqDist and AgreeCount each carried a verbatim copy of
-  * this ~15-line scaffold, and the r3-verdict once-per-session
-  * semantics — re-registering mid-flight mutates the session and
-  * floods the log with replaced-function WARNs — had four copies to
-  * keep in sync). As of round 9 every expression object routes its
-  * registration through here — one face per SQL function name — so
-  * the once-per-session semantics has exactly one implementation. */
+/** One SQL function face of a native expression: its name, its
+  * builder, once-per-session temp-function registration and a Column
+  * face. Registration happens once per session because re-registering
+  * mid-flight mutates the session and floods the log with
+  * replaced-function WARNs. GraftExtensions.faces lists every face;
+  * the session extension and `registerAll` both walk that list. */
 private[expressions] final class FnRegistry(
-    name: String, builder: Seq[Expression] => Expression) {
+    val name: String, val builder: Seq[Expression] => Expression) {
   import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
   private val registered = java.util.Collections.synchronizedMap(

@@ -2,61 +2,35 @@ package graft.expressions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point registering graft's custom
   * Catalyst expressions as SQL functions, so a deployment can enable
   * them cluster-wide via
   * `spark.sql.extensions=graft.expressions.GraftExtensions` (no
-  * per-session register calls). The `register(spark)` helpers on each
-  * expression object remain for ad-hoc sessions.
+  * per-session register calls).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def fn(name: String, builder: Seq[Expression] => Expression)
-    : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo("graft.expressions", name), builder)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(fn("simhash64", exprs => SimHash64(exprs.head)))
-    e.injectFunction(fn("shingle_hash64", exprs => ShingleHash64(exprs(0), exprs(1))))
-    e.injectFunction(fn("dot_product", exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction(fn("sq_dist", exprs => SqDist(exprs(0), exprs(1))))
-    e.injectFunction(fn("sign_sig63", exprs => SignSig63(exprs.head)))
-    e.injectFunction(fn("agree_count", exprs => AgreeCount(exprs(0), exprs(1))))
-    e.injectFunction(fn("normalize_string", exprs => {
-      val form = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v,
-          org.apache.spark.sql.types.StringType) => v.toString
-        case _ => "NFC"
-      }
-      NormalizeString(exprs.head, form)
-    }))
-    e.injectFunction(fn("bloom_agg", exprs =>
-      BloomFilterAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    e.injectFunction(fn("bloom_might_contain", exprs => {
-      val k = exprs(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-          org.apache.spark.sql.types.IntegerType) => v
-        case _ => 5
-      }
-      BloomMightContain(exprs(0), exprs(1), k)
-    }))
+    GraftExtensions.faces.foreach(f => e.injectFunction(
+      (FunctionIdentifier(f.name), new ExpressionInfo("graft.expressions", f.name), f.builder)))
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     e.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
   }
 }
 
 object GraftExtensions {
+
+  /** Every SQL function graft defines, one face each: the single list
+    * behind both the session extension and `registerAll`. */
+  private[expressions] val faces: Seq[FnRegistry] = Seq(
+    ShingleHash64.face, DotProduct.face, SqDist.face, SignSig63.face,
+    AgreeCount.face, NormalizeString.face, SimHashPoly.face, SimHashPoly.face62,
+    BloomFilter.aggFace, BloomFilter.containsFace, Gram.longFace, Gram.doubleFace,
+    KllSketch.aggFace, KllSketch.quantileFace)
+
   /** Register everything on an existing session (same effect as the
     * spark.sql.extensions config for already-built sessions). */
-  def registerAll(spark: SparkSession): Unit = {
-    SimHash64.register(spark)
-    ShingleHash64.register(spark)
-    DotProduct.register(spark)
-    NormalizeString.register(spark)
-    SqDist.register(spark)
-    SignSig63.register(spark)
-    AgreeCount.register(spark)
-  }
+  def registerAll(spark: SparkSession): Unit = faces.foreach(_.register(spark))
 }

@@ -326,15 +326,10 @@ case class GramAggDouble(
 }
 
 object Gram {
-  private val longFace = new FnRegistry("gram_agg_long",
+  private[expressions] val longFace = new FnRegistry("gram_agg_long",
     exprs => GramAggLong(exprs(0), exprs(1)).toAggregateExpression())
-  private val doubleFace = new FnRegistry("gram_agg_double",
+  private[expressions] val doubleFace = new FnRegistry("gram_agg_double",
     exprs => GramAggDouble(exprs(0), exprs(1)).toAggregateExpression())
-
-  def register(spark: SparkSession): Unit = {
-    longFace.register(spark)
-    doubleFace.register(spark)
-  }
 
   def gramAggLong(spark: SparkSession, vec: Column, d: Int): Column =
     longFace.column(spark, vec, org.apache.spark.sql.functions.lit(d))

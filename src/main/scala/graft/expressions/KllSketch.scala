@@ -205,15 +205,10 @@ case class KllQuantile(left: Expression, right: Expression) extends BinaryExpres
 }
 
 object KllSketch {
-  private val aggFace = new FnRegistry("kll_agg",
+  private[expressions] val aggFace = new FnRegistry("kll_agg",
     exprs => KllAgg(exprs(0), exprs(1)).toAggregateExpression())
-  private val quantileFace = new FnRegistry("kll_quantile",
+  private[expressions] val quantileFace = new FnRegistry("kll_quantile",
     exprs => KllQuantile(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit = {
-    aggFace.register(spark)
-    quantileFace.register(spark)
-  }
 
   def kllAgg(spark: SparkSession, value: Column, k: Int): Column =
     aggFace.column(spark, value, org.apache.spark.sql.functions.lit(k))

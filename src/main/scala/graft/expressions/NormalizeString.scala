@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fingerprinting and token counting unless every document is brought
   * to one canonical form. Wrapping java.text.Normalizer in a Scala UDF
   * would lose codegen and pay serialization per row; this stays inside
-  * the stage loop (same pattern as SimHash64/DotProduct).
+  * the stage loop (same pattern as DotProduct).
   *
   * Forms: NFC/NFD/NFKC/NFKD (java.text.Normalizer semantics, which
   * match DuckDB's nfc_normalize for NFC — the q_normalize oracle).
@@ -54,7 +54,7 @@ object NormalizeString {
   def normalize(s: String, form: String): String =
     java.text.Normalizer.normalize(s, java.text.Normalizer.Form.valueOf(form))
 
-  private val face =
+  private[expressions] val face =
     new FnRegistry("normalize_string", exprs => {
       val form = exprs(1) match {
         case org.apache.spark.sql.catalyst.expressions.Literal(v, StringType) => v.toString
@@ -62,8 +62,6 @@ object NormalizeString {
       }
       NormalizeString(exprs.head, form)
     })
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def normalizeString(spark: SparkSession, c: Column, form: String = "NFC"): Column =
     face.column(spark, c, org.apache.spark.sql.functions.lit(form))

@@ -71,10 +71,8 @@ case class ShingleHash64(tokens: Expression, nExpr: Expression)
 }
 
 object ShingleHash64 {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("shingle_hash64", exprs => ShingleHash64(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def shingleHash64(spark: SparkSession, tokens: Column, n: Int): Column =
     face.column(spark, tokens, org.apache.spark.sql.functions.lit(n))

@@ -88,10 +88,8 @@ case class SignSig63(child: Expression) extends UnaryExpression {
 }
 
 object SignSig63 {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("sign_sig63", exprs => SignSig63(exprs.head))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def signSig63(spark: SparkSession, a: Column): Column = face.column(spark, a)
 }

@@ -15,15 +15,13 @@ import org.apache.spark.sql.types._
   * produce across all 31 bits; without it high bits are identically
   * zero and the vote degenerates), then the classic ±1 vote per bit
   * position (Charikar '02), sign bitmap out (bit set iff the vote
-  * count is > 0 — same sign rule as SimHash64).
+  * count is > 0).
   *
-  * Twin of SimHash64: that one uses xxhash64 (faster per byte, wider
-  * signature, not expressible outside the JVM); this one's every step
-  * is integer arithmetic a SQL engine replays term-for-term, so a
-  * pair query built on it can be gated by a full DuckDB oracle
-  * rather than rows-only. Same single-pass-per-row shape: one tight
-  * JVM loop, no per-bit array passes — the HOF formulation of the
-  * same hash would re-scan the token-hash array 31 times per row.
+  * Every step is integer arithmetic a SQL engine replays
+  * term-for-term, so a pair query built on it is gated by a full
+  * DuckDB oracle. A native expression because it runs as one tight
+  * JVM loop per row: the HOF formulation of the same hash re-scans
+  * the token-hash array once per bit, 31 times per row.
   *
   * Code points (not UTF-16 units) are hashed, matching SQL
   * `ascii(substring(s, i, 1))` / character-indexed `length()`
@@ -74,17 +72,13 @@ case class SimHashPoly(child: Expression)
 }
 
 object SimHashPoly {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("simhash_poly", exprs => SimHashPoly(exprs.head))
-  private val face62 =
+  private[expressions] val face62 =
     new FnRegistry("simhash_poly62", exprs => SimHashPoly62(exprs.head))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   def simhashPoly(spark: SparkSession, tokens: Column): Column =
     face.column(spark, tokens)
-
-  def register62(spark: SparkSession): Unit = face62.register(spark)
 
   def simhashPoly62(spark: SparkSession, tokens: Column): Column =
     face62.column(spark, tokens)

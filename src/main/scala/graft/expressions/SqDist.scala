@@ -100,10 +100,8 @@ case class SqDist(left: Expression, right: Expression)
 }
 
 object SqDist {
-  private val face =
+  private[expressions] val face =
     new FnRegistry("sq_dist", exprs => SqDist(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit = face.register(spark)
 
   /** Column face; registers on first use in the session. */
   def sqDist(spark: SparkSession, a: Column, b: Column): Column =

@@ -58,36 +58,6 @@ object TextFunctions {
   def shingleHashes(spark: org.apache.spark.sql.SparkSession, text: Column, n: Int): Column =
     graft.expressions.ShingleHash64.shingleHash64(spark, tokens(text), n)
 
-  /** k-minhash signature over a shingle array. Hash family
-    * h_j(x) = (A_j * (xxhash64(x) mod P) + B_j) mod P over the 30-bit
-    * prime P = 1073741789: keeps every product < 2^37, so the
-    * arithmetic never overflows under Spark 4's default ANSI mode.
-    * Deterministic and partition-invariant. Empty shingle arrays give
-    * null mins — callers filter those docs out first. */
-  def minhashSignature(shingles: Column, k: Int): Column = {
-    val P = 1073741789L
-    val phi = -7046029254386353131L // 64-bit golden ratio constant
-    array((0 until k).map { j =>
-      val a = 2L * j + 1
-      val b = math.floorMod(phi * (j + 1), P)
-      array_min(transform(shingles, s =>
-        pmod(lit(a) * pmod(xxhash64(s), lit(P)) + lit(b), lit(P))))
-    }: _*)
-  }
-
-  /** LSH band keys for a minhash signature: `bands` structs of
-    * (band index, hash of that band's signature slice). Docs sharing
-    * any band key are near-dup candidates — the join is
-    * O(docs x bands), never O(docs^2). */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(array_join(transform(
-          slice(sig, b * rowsPerBand + 1, rowsPerBand),
-          v => v.cast("string")), ",")).as("bkey"))
-    }: _*)
-
   /** Polynomial rolling-hash fingerprint: fold (acc*31 + ascii(ch))
     * mod 1e9+7 over the characters. Mirrors DuckDB
     * `list_reduce(list_prepend(0, codes), (a,b) -> (a*31+b) % 1000000007)`. */

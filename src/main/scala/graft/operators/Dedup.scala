@@ -4,14 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
-import graft.expressions.SimHash64.simhash64
 
 /** Deduplication family for training-data pipelines (SURVEY §2.4).
   *
   * Exact dedup groups on a digest of the content, near-dup variants
   * all follow the same scale shape: derive a compact per-doc signal
   * (shingle set / minhash signature / simhash), BLOCK on something
-  * shared by near-dups (band key, simhash prefix, shingle), join
+  * shared by near-dups (band key, simhash band, shingle), join
   * within blocks only, then verify candidates exactly. Shuffles are
   * O(docs x small-factor); the quadratic all-pairs comparison never
   * materializes.
@@ -26,36 +25,6 @@ object Dedup {
   def exactKeepFirst(df: DataFrame, contentCol: Column, tiebreak: Column): DataFrame = {
     val w = Window.partitionBy(md5(contentCol)).orderBy(tiebreak)
     df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Candidate near-dup pairs via MinHash + LSH banding.
-    * numHashes = bands * rowsPerBand. Docs sharing >= 1 band key meet
-    * in a bucket; pair emission is distinct on (a,b). `maxBucket`
-    * guards against degenerate buckets (all-identical corpora) the
-    * way frequent-shingle caps do in production dedup.
-    * Output: (id_a, id_b, jaccard_est) with id_a < id_b. */
-  def minhashCandidates(df: DataFrame, idCol: Column, textCol: Column,
-                        shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-                        maxBucket: Int = 1000): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sigs = graft.util.Spread(df).select(
-        idCol.as("id"),
-        array_distinct(shingleHashes(df.sparkSession, textCol, shingleSize)).as("sh"))
-      .where(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .select(col("id"), col("sig"), explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val a = sigs.as("a")
-    val b = sigs.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        // native codegen'd agreement count (expressions/AgreeCount.scala
-        // — HOF-parity proven in spec): runs once per candidate pair,
-        // the near-dup relation that dominates at corpus scale
-        (graft.expressions.AgreeCount.agreeCount(col("a.sig"), col("b.sig"))
-          .cast("double") / lit(numHashes.toDouble)).as("jaccard_est"))
-      .groupBy("id_a", "id_b").agg(max("jaccard_est").as("jaccard_est"))
   }
 
   /** Affine-permutation constants (a_j, b_j) for the arithmetic
@@ -74,11 +43,10 @@ object Dedup {
     * (acc·31 + code) mod 1e9+7), permutations = minhashPermConsts
     * affine maps, band key = the same polynomial fold (base 1048573)
     * over the band's signature slice. Every step is integer
-    * arithmetic a SQL engine can replay term-for-term, so unlike
-    * `minhashCandidates` (xxhash64-based, faster per byte, rows-only
-    * checkable) this variant's estimates hash-match a DuckDB oracle.
-    * Same LSH scale shape: O(docs × bands) blocking join, candidates
-    * distinct-ed before the signature compare, never O(docs²). */
+    * arithmetic a SQL engine can replay term-for-term, so the
+    * estimates hash-match a DuckDB oracle. LSH scale shape:
+    * O(docs × bands) blocking join, candidates distinct-ed before the
+    * signature compare, never O(docs²). */
   /** The arithmetic-family minhash signature table (id, sig) —
     * persisted, since callers feed it to both the band join and the
     * verification join. */
@@ -261,30 +229,14 @@ object Dedup {
     }
   }
 
-  /** SimHash near-dup candidates: 64-bit signature per doc, block on
-    * 16-bit signature prefix (near-dups almost always share it),
-    * verify with exact hamming distance <= maxHamming. */
-  def simhashPairs(df: DataFrame, idCol: Column, textCol: Column,
-                   maxHamming: Int = 3): DataFrame = {
-    val sigs = df.select(idCol.as("id"),
-        simhash64(df.sparkSession, tokens(textCol)).as("sig"))
-      .withColumn("blk", shiftrightunsigned(col("sig"), 48))
-    sigs.as("a").join(sigs.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
   /** SimHash pairs over the ORACLE-REPLICABLE 62-bit dual polynomial
-    * signature (graft.expressions.SimHashPoly62 — see there for the
-    * twin rationale) with PIGEONHOLE band blocking: the signature
-    * splits into maxHamming+1 bands, any pair within the hamming
-    * radius shares at least one exact band, so the banded candidate
-    * join is COMPLETE (every hamming ≤ maxHamming pair is emitted —
-    * strictly better than the old top-8-bit prefix block, which both
-    * missed cross-prefix pairs and degenerated quadratically: 256
-    * buckets over 1.5M docs measured 63× cost for 10× data). Bucket
+    * signature (graft.expressions.SimHashPoly62) with PIGEONHOLE band
+    * blocking: the signature splits into maxHamming+1 bands, any pair
+    * within the hamming radius shares at least one exact band, so the
+    * banded candidate join is COMPLETE (every hamming ≤ maxHamming
+    * pair is emitted; a top-8-bit prefix block both misses
+    * cross-prefix pairs and degenerates quadratically: 256 buckets
+    * over 1.5M docs measured 63× cost for 10× data). Bucket
     * keys carry ~62/(maxHamming+1) bits, so occupancy shrinks with
     * the radius budget, and the hamming verify keeps the output
     * exact. Every step replays in DuckDB. */
@@ -294,7 +246,7 @@ object Dedup {
     // already the outer edge of simhash near-dup practice (w = 7 bits
     // → 128-way buckets), and beyond it the zero-/few-bit band keys
     // collide everything — a quadratic join wearing an LSH costume
-    // (round-5 advice item: w hits 0 at maxHamming >= 31).
+    // (w hits 0 at maxHamming >= 31).
     require(maxHamming >= 0 && maxHamming <= 7,
       s"simhashPairsArith: maxHamming must be in [0, 7], got $maxHamming " +
         "(band keys carry 62/(maxHamming+1) bits; wider radii need a " +
@@ -305,10 +257,6 @@ object Dedup {
       graft.util.Spread(df).select(idCol.as("id"),
         graft.expressions.SimHashPoly.simhashPoly62(df.sparkSession,
           tokens(textCol)).as("sig")))
-    // signatures RIDE ALONG with the band rows (the lshCosinePairs
-    // pattern): the hamming verify runs inline in the band join and
-    // the pair-dedup groupBy happens AFTER the radius filter, over
-    // true pairs only — no candidate-table distinct, no sig re-joins
     val bandKeys = sigs.select(col("id"), col("sig"),
         explode(array((0 until bands).map { b =>
           val lo = b * w
@@ -319,13 +267,8 @@ object Dedup {
         }: _*)).as("bk"))
       .select(col("id"), col("sig"),
         col("bk.band").as("band"), col("bk.bval").as("bval"))
-    bandKeys.as("a").join(bandKeys.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .groupBy("id_a", "id_b").agg(first(col("hamming")).as("hamming"))
+    BandedLsh.selfJoin(bandKeys, "hamming")(
+      (a, b) => bit_count(a.bitwiseXOR(b)).cast("long"), _ <= maxHamming)
   }
 
   /** Incremental dedup: grade a NEW ingest batch against an EXISTING

@@ -11,12 +11,14 @@ import graft.expressions.DotProduct.dotProduct
   * Shapes: `bruteForceTopK` is the exact baseline — broadcast the
   * (small) query set against the full collection, one normalized dot
   * per (query, vector). `cosinePairs` is the exact all-pairs
-  * near-dup scan. `lshCosinePairs` is the scale path: random-
-  * hyperplane sign buckets (Charikar SimHash for vectors) block the
-  * join to same-bucket candidates, verified exactly — O(n x bucket)
-  * instead of O(n^2), with banding (multiple independent tables)
-  * buying recall back. Planes are derived from a fixed seed:
-  * deterministic across runs and partitionings.
+  * near-dup scan. `lshCosinePairsIH` (auto-sized by
+  * `lshCosinePairsAutoIH`) is the scale path: random-hyperplane sign
+  * buckets (Charikar SimHash for vectors) block the join to
+  * same-bucket candidates, verified exactly — O(n x bucket) instead
+  * of O(n^2), with banding (multiple independent tables) buying
+  * recall back. Planes are integer coefficient families, so the
+  * signatures are deterministic across runs and partitionings and
+  * replayable by a SQL engine.
   */
 object Similarity {
 
@@ -36,19 +38,6 @@ object Similarity {
     * util (graft.util.Spread): a no-op when the input already
     * carries enough splits. */
   private def spread(df: DataFrame): DataFrame = graft.util.Spread(df)
-
-  /** Plane-sign bits of the `vu` micro-unit column against the literal
-    * coefficient planes — one codegen'd long DotProduct per plane
-    * (round-8: the transform-over-coefficients HOF ran every inner
-    * fold interpreted with a zip_with alloc per plane per row;
-    * identical wrapping long arithmetic, so the oracle-replayed
-    * signatures are unchanged). ONE shared body for both LSH variants:
-    * their oracle parity depends on identical signatures — the same
-    * single-copy rule as Graph.prRound (round-7 advice item 5). */
-  private def planeBits(spark: org.apache.spark.sql.SparkSession,
-                        coef: Seq[Seq[Long]]): Column =
-    array(coef.map(cp =>
-      (dotProduct(spark, col("vu"), typedLit(cp)) > 0).cast("int")): _*)
 
   /** Exact top-k nearest (cosine) rows for each query row.
     * Cosine is rounded to 6 decimals BEFORE ranking, with the id as
@@ -75,7 +64,7 @@ object Similarity {
     * as bruteForceTopK; the label inequality prunes INSIDE the scored
     * join, before ranking, so the top-k is over true negatives only.
     * Scale path: swap the scored join for the LSH-bucketed candidate
-    * generation (knnGraphLsh) and apply the same label filter in the
+    * generation (knnGraphLshIH) and apply the same label filter in the
     * bucket join — the blocking is label-oblivious so recall carries
     * over unchanged. */
   def hardNegatives(df: DataFrame, idCol: Column, vecCol: Column,
@@ -108,150 +97,90 @@ object Similarity {
       .where(col("cosine") >= tau)
   }
 
-  /** Random-hyperplane LSH near-dup pairs (Charikar '02), banded:
-    * `tables` independent hash tables of `planes` hyperplanes each.
-    * Two vectors are candidates when they share the full sign
-    * signature of ANY table; candidates are deduped then verified with
-    * the exact cosine, so precision is exact and only recall is
-    * approximate. Per-plane collision probability for angle θ is
-    * 1-θ/π, so recall at threshold τ is ≥ 1-(1-(1-acos(τ)/π)^planes)^tables
-    * — planes controls bucket selectivity (bucket size ~ n/2^planes on
-    * isotropic data; grow it with n), tables buys recall back. This is
-    * the same band trick as Dedup.minhashCandidates: O(n·tables)
-    * bucket rows, never the O(n²) compare. `maxBucket` drops
-    * degenerate buckets (all-near-identical corpora) the way frequent-
-    * shingle caps do — candidates only ever shrink, so the exact-verify
-    * subset property is preserved. Planes derive from a fixed seed:
-    * deterministic across runs and partitionings. */
-  def lshCosinePairs(df: DataFrame, idCol: Column, vecCol: Column, tau: Double,
-                     dim: Int, planes: Int = 8, tables: Int = 1,
-                     maxBucket: Int = 100000, seed: Long = 42L): DataFrame = {
-    val rnd = new scala.util.Random(seed)
-    val hyper: Seq[Seq[Double]] =
-      Seq.fill(tables * planes)(Seq.fill(dim)(rnd.nextGaussian()))
-    val n = CacheScope.persist(spread(normed(df, idCol, vecCol)))
-    // One typedLit constant + one transform pass computes all
-    // tables*planes sign bits — inlining each plane as its own array()
-    // literal would put tables*planes*dim literal nodes in the plan and
-    // dominate runtime with analysis/codegen, not math. The inner dot
-    // is the codegen'd DotProduct expression: the HOF zip_with form
-    // allocates an intermediate array per plane per row, which at
-    // tables*planes in the hundreds dominated the sf1 bench.
-    val planesLit = typedLit(hyper)
-    val bits = transform(planesLit,
-      p => (dotProduct(df.sparkSession, col("vn"), p) > 0).cast("int"))
+  /** Banded random-hyperplane LSH near-dup pairs (Charikar '02) — the
+    * one body behind both coefficient families below. `tables`
+    * independent hash tables of `planes` hyperplanes each; two vectors
+    * are candidates when they share the full sign signature of ANY
+    * table, and candidates are verified with the exact rounded cosine,
+    * so precision is exact and only recall is approximate. Per-plane
+    * collision probability for angle θ is 1-θ/π, so recall at
+    * threshold τ is ≥ 1-(1-(1-acos(τ)/π)^planes)^tables: planes sets
+    * bucket selectivity (~n/2^planes vectors per bucket on isotropic
+    * data), tables buys recall back. O(n·tables) bucket rows, never the
+    * O(n²) compare.
+    *
+    * Plane p's sign bit is Σ coef(p, i)·round(v_i·10⁶) > 0 over the
+    * dimensions i (1-based): all-long arithmetic, so bucket membership
+    * is bit-identical across engines and partitionings and a SQL
+    * engine can replay every step. Each plane is one codegen'd long
+    * DotProduct against a literal coefficient array (a
+    * transform-over-coefficients HOF ran every inner fold interpreted,
+    * with a zip_with allocation per plane per row).
+    *
+    * `maxBucket` drops degenerate buckets (all-near-identical corpora)
+    * with one count window over the bucket shuffle the join needs
+    * anyway; a groupBy + anti-join variant regressed 2.5×, because it
+    * forks the plan above the signature stage. Candidates only ever
+    * shrink, so the exact-verify subset property holds. The bucket rows
+    * are persisted so the self-join does not compute the signature
+    * stage once per side. */
+  private def bandedCosinePairs(df: DataFrame, idCol: Column, vecCol: Column,
+                                tau: Double, dim: Int, planes: Int, tables: Int,
+                                maxBucket: Option[Int])
+                               (coef: (Int, Int) => Long): DataFrame = {
+    val spark = df.sparkSession
+    val n = CacheScope.persist(
+      df.select(idCol.as("id"), toDouble(vecCol).as("vd"))
+        .withColumn("nrm", sqrt(dotProduct(spark, col("vd"), col("vd"))))
+        .withColumn("vn", transform(col("vd"), x => x / col("nrm")))
+        .withColumn("vu", transform(col("vd"), x => round(x * 1e6, 0).cast("long")))
+        .select(col("id"), col("vn"), col("vu")))
+    val coefs: Seq[Seq[Long]] =
+      (0 until tables * planes).map(p => (1 to dim).map(i => coef(p, i)))
+    val bits = array(coefs.map(cp =>
+      (dotProduct(spark, col("vu"), typedLit(cp)) > 0).cast("int")): _*)
     val sigCols = (0 until tables).map { t =>
       val sig = (0 until planes).map { p =>
         element_at(col("__bits"), t * planes + p + 1) * lit(1 << p)
       }.reduce(_ + _)
       struct(lit(t).as("tbl"), sig.as("sig"))
     }
-    // Vectors ride along with the bucket rows: the in-bucket join then
-    // verifies candidates INLINE (cosine + tau filter pipelined in the
-    // join task, never materialized), and the pair-dedup groupBy runs
-    // AFTER the filter, over true pairs only — orders of magnitude
-    // smaller than a distinct over all candidates. Shuffle volume is
-    // O(n·tables·dim): the same factor the signature computation
-    // already pays.
     val buckets = n
       .withColumn("__bits", bits)
       .select(col("id"), col("vn"), explode(array(sigCols: _*)).as("bk"))
       .select(col("id"), col("vn"), col("bk.tbl").as("tbl"), col("bk.sig").as("sig"))
-    // Degenerate-bucket guard: one count window over the bucket shuffle
-    // the join needs anyway. (A groupBy + anti-join variant was tried
-    // and REGRESSED 2.5×: it forks the plan above the signature stage,
-    // recomputing it per branch.) The persist stops the self-join from
-    // recomputing the signature stage once per side.
-    val capped = {
+    val capped = maxBucket.fold(buckets) { cap =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy("tbl", "sig")
-      CacheScope.persist(buckets.withColumn("__bn", count(lit(1)).over(w))
-        .where(col("__bn") <= maxBucket).drop("__bn"))
+      buckets.withColumn("__bn", count(lit(1)).over(w))
+        .where(col("__bn") <= cap).drop("__bn")
     }
-    capped.as("a").join(capped.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(dotProduct(df.sparkSession, col("a.vn"), col("b.vn")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
-      .groupBy("id_a", "id_b").agg(first(col("cosine")).as("cosine"))
+    BandedLsh.selfJoin(CacheScope.persist(capped), "cosine")(
+      (a, b) => round(dotProduct(spark, a, b), 6), _ >= tau)
   }
 
-  /** lshCosinePairs twin with ARITHMETIC Rademacher (±1) hyperplanes —
-    * every step replayable by a SQL engine, so the banded-LSH
-    * candidate generation itself (not just the exact verification)
-    * can be proven against an independent oracle.
-    *
-    * Plane p's coefficient over dimension i (1-based) is
+  /** Banded LSH with ARITHMETIC Rademacher (±1) hyperplanes. Plane p's
+    * coefficient over dimension i (1-based) is
     * `((a_p·i + b_p) mod M) mod 2 == 0 ? +1 : -1` with
     * M = 2^31−1, a_p = (p+1)·2654435761 mod M, b_p = (p+1)·40503
     * mod M — a published affine family in the same spirit as the
     * arithmetic minhash permutations (Dedup.scala). Rademacher
     * projections have the same sign-concentration guarantees as
-    * Gaussian ones (Achlioptas 2003), so recall behavior matches the
-    * seeded-Gaussian production twin.
-    *
-    * Exactness: the sign test runs on Σ c(p,i)·round(v[i]·1e6) —
-    * ALL-INTEGER arithmetic (|terms| ≤ dim·2e6, far inside long), so
-    * bucket membership is bit-identical across engines and
-    * partitionings; the final cosine filter reuses the proven
-    * round-to-6 rule. No maxBucket cap here: the production twin
-    * keeps it; this variant stays cap-free so the oracle SQL needn't
-    * replicate the window. Same O(n·tables) bucket-join shape. */
+    * Gaussian ones (Achlioptas 2003). |terms| ≤ dim·2e6, far inside
+    * long. No maxBucket cap, so the oracle SQL need not replay the
+    * window. */
   def arithLshCosinePairs(df: DataFrame, idCol: Column, vecCol: Column, tau: Double,
                           dim: Int, planes: Int = 4, tables: Int = 8): DataFrame = {
     val M = 2147483647L
-    val coef: Seq[Seq[Long]] = (0 until tables * planes).map { p =>
-      val a = ((p + 1).toLong * 2654435761L) % M
-      val b = ((p + 1).toLong * 40503L) % M
-      (1 to dim).map(i => if (((a * i + b) % M) % 2 == 0) 1L else -1L)
+    bandedCosinePairs(df, idCol, vecCol, tau, dim, planes, tables, maxBucket = None) {
+      (p, i) =>
+        val a = ((p + 1).toLong * 2654435761L) % M
+        val b = ((p + 1).toLong * 40503L) % M
+        if (((a * i + b) % M) % 2 == 0) 1L else -1L
     }
-    val n = CacheScope.persist(
-      df.select(idCol.as("id"), toDouble(vecCol).as("vd"))
-        .withColumn("nrm", sqrt(dotProduct(df.sparkSession, col("vd"), col("vd"))))
-        .withColumn("vn", transform(col("vd"), x => x / col("nrm")))
-        .withColumn("vu", transform(col("vd"), x => round(x * 1e6, 0).cast("long")))
-        .select(col("id"), col("vn"), col("vu")))
-    val bits = planeBits(df.sparkSession, coef)
-    val sigCols = (0 until tables).map { t =>
-      val sig = (0 until planes).map { p =>
-        element_at(col("__bits"), t * planes + p + 1) * lit(1 << p)
-      }.reduce(_ + _)
-      struct(lit(t).as("tbl"), sig.as("sig"))
-    }
-    val buckets = CacheScope.persist(n
-      .withColumn("__bits", bits)
-      .select(col("id"), col("vn"), explode(array(sigCols: _*)).as("bk"))
-      .select(col("id"), col("vn"), col("bk.tbl").as("tbl"), col("bk.sig").as("sig")))
-    buckets.as("a").join(buckets.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(dotProduct(df.sparkSession, col("a.vn"), col("b.vn")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
-      .groupBy("id_a", "id_b").agg(first(col("cosine")).as("cosine"))
-  }
-
-  /** lshCosinePairs with parameters derived from the collection size
-    * and a recall target instead of hand tuning — the knob that keeps
-    * the operator's cost LINEAR as data grows. Fixed planes make
-    * bucket population n/2^planes, so in-bucket candidate work grows
-    * quadratically with n; sizing planes to hold ~`targetBucket`
-    * vectors per bucket (planes = ceil(log2(n/targetBucket))) pins
-    * per-bucket work, and tables then comes from inverting the recall
-    * formula at the threshold: tables = ceil(ln(1-recall)/ln(1-p^planes)),
-    * p = 1-acos(tau)/π. One count() job buys the sizing. */
-  def lshCosinePairsAuto(df: DataFrame, idCol: Column, vecCol: Column, tau: Double,
-                         dim: Int, targetRecall: Double = 0.8, targetBucket: Int = 100,
-                         maxTables: Int = 64, seed: Long = 42L): DataFrame = {
-    val n = df.count()
-    val planes = math.min(24, math.max(1,
-      math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt))
-    val tables = tablesFor(planes, tau, targetRecall, maxTables)
-    lshCosinePairs(df, idCol, vecCol, tau, dim, planes, tables, seed = seed)
   }
 
   // ---------------------------------------------------------------
-  // Irwin–Hall integer-plane family: the ENGINE-PROVEN production LSH
+  // Irwin–Hall integer-plane family: the production LSH
   // ---------------------------------------------------------------
 
   /** Integer-exact plane count: the smallest q with 2^q ≥ n/target
@@ -293,50 +222,15 @@ object Similarity {
     s - 1998L
   }
 
-  /** lshCosinePairs with the Irwin–Hall integer planes: identical
-    * banded shape (sign signatures per table, in-bucket equi join,
-    * maxBucket degenerate guard, inline exact verify) but every sign
-    * bit is decided by Σ g(p,i)·round(v_i·10⁶) — all-long arithmetic
-    * (|terms| ≤ 64·2000·2·10⁶ ≈ 2.6·10¹¹), bit-identical across
-    * engines and partitionings. This is the PRODUCTION binding of
-    * the near-dup headline: same recall machinery as the
-    * seeded-Gaussian variant, plus a full DuckDB oracle. */
+  /** Banded LSH with the Irwin–Hall integer planes (ihCoef) and the
+    * maxBucket degenerate guard. |terms| ≤ 64·2000·2·10⁶ ≈ 2.6·10¹¹,
+    * inside long. This family binds q_lsh_cosine_pairs and
+    * q_knn_graph_lsh, each with a full DuckDB oracle. */
   def lshCosinePairsIH(df: DataFrame, idCol: Column, vecCol: Column, tau: Double,
                        dim: Int, planes: Int, tables: Int,
-                       maxBucket: Int = 100000): DataFrame = {
-    val coef: Seq[Seq[Long]] = (0 until tables * planes).map { p =>
-      (1 to dim).map(i => ihCoef(p, i, dim))
-    }
-    val n = CacheScope.persist(
-      df.select(idCol.as("id"), toDouble(vecCol).as("vd"))
-        .withColumn("nrm", sqrt(dotProduct(df.sparkSession, col("vd"), col("vd"))))
-        .withColumn("vn", transform(col("vd"), x => x / col("nrm")))
-        .withColumn("vu", transform(col("vd"), x => round(x * 1e6, 0).cast("long")))
-        .select(col("id"), col("vn"), col("vu")))
-    val bits = planeBits(df.sparkSession, coef)
-    val sigCols = (0 until tables).map { t =>
-      val sig = (0 until planes).map { p =>
-        element_at(col("__bits"), t * planes + p + 1) * lit(1 << p)
-      }.reduce(_ + _)
-      struct(lit(t).as("tbl"), sig.as("sig"))
-    }
-    val buckets = n
-      .withColumn("__bits", bits)
-      .select(col("id"), col("vn"), explode(array(sigCols: _*)).as("bk"))
-      .select(col("id"), col("vn"), col("bk.tbl").as("tbl"), col("bk.sig").as("sig"))
-    val capped = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("tbl", "sig")
-      CacheScope.persist(buckets.withColumn("__bn", count(lit(1)).over(w))
-        .where(col("__bn") <= maxBucket).drop("__bn"))
-    }
-    capped.as("a").join(capped.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(dotProduct(df.sparkSession, col("a.vn"), col("b.vn")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
-      .groupBy("id_a", "id_b").agg(first(col("cosine")).as("cosine"))
-  }
+                       maxBucket: Int = 100000): DataFrame =
+    bandedCosinePairs(df, idCol, vecCol, tau, dim, planes, tables,
+      Some(maxBucket))(ihCoef(_, _, dim))
 
   /** Auto-sized Irwin–Hall LSH: planesFor's integer sizing +
     * tablesFor's precomputed inversion — both replayed verbatim by
@@ -350,39 +244,20 @@ object Similarity {
     lshCosinePairsIH(df, idCol, vecCol, tau, dim, planes, tables)
   }
 
-  /** knnGraphLsh over the Irwin–Hall candidate generation — the
-    * engine-proven kNN-graph scale path (same symmetrize + rescore +
-    * per-node top-k as knnGraphLsh). */
+  /** Approximate k-nearest-neighbor GRAPH (every node's top-k
+    * neighbors at cosine ≥ `tau`) from the auto-sized Irwin–Hall LSH
+    * candidates — the scale path for kNN-graph construction (semantic
+    * dedup clusters, quality propagation, kNN classification). The
+    * exact formulation is an O(n²) all-pairs compare; here candidate
+    * pairs come from banded sign-signature buckets (O(n·tables) bucket
+    * rows), are symmetrized, and each node keeps its k best by exact
+    * rescored cosine. A node's list may be shorter than k in sparse
+    * neighborhoods. */
   def knnGraphLshIH(df: DataFrame, idCol: Column, vecCol: Column,
                     k: Int, tau: Double, dim: Int,
                     targetRecall: Double = 0.9): DataFrame = {
     val pairs = lshCosinePairsAutoIH(df, idCol, vecCol, tau, dim,
       targetRecall = targetRecall)
-    val sym = pairs.select(col("id_a").as("query_id"), col("id_b").as("id"), col("cosine"))
-      .union(pairs.select(col("id_b").as("query_id"), col("id_a").as("id"), col("cosine")))
-    TopKPerGroup.topK(sym, Seq(col("query_id")),
-      Seq(desc("cosine"), col("id")), k, rankCol = "rnk")
-      .select("query_id", "id", "cosine", "rnk")
-  }
-
-  /** Approximate k-nearest-neighbor GRAPH (every node's top-k
-    * positive-cosine neighbors) from LSH-bucketed candidates — the
-    * scale path for kNN-graph construction (semantic dedup clusters,
-    * graph-based quality propagation, kNN-classification of unlabeled
-    * corpus slices). The exact formulation is an O(n²) all-pairs
-    * compare; here candidates come from lshCosinePairsAuto's banded
-    * sign-signature buckets (O(n·tables) bucket rows), are
-    * symmetrized, and each node keeps its k best by exact rescored
-    * cosine. Neighbors below `tau` are not candidates — a node's list
-    * may therefore be shorter than k (sparse neighborhoods), which is
-    * the behavior a dedup/quality pipeline wants anyway.
-    * Rows-only by design (seeded hyperplanes); VectorSpec pins recall
-    * against the exact graph. */
-  def knnGraphLsh(df: DataFrame, idCol: Column, vecCol: Column,
-                  k: Int, tau: Double, dim: Int,
-                  targetRecall: Double = 0.9, seed: Long = 42L): DataFrame = {
-    val pairs = lshCosinePairsAuto(df, idCol, vecCol, tau, dim,
-      targetRecall = targetRecall, seed = seed)
     val sym = pairs.select(col("id_a").as("query_id"), col("id_b").as("id"), col("cosine"))
       .union(pairs.select(col("id_b").as("query_id"), col("id_a").as("id"), col("cosine")))
     TopKPerGroup.topK(sym, Seq(col("query_id")),

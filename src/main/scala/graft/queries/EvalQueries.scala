@@ -691,7 +691,7 @@ object EvalQueries {
     * to the smaller label (the q_knn_classify max-struct convention).
     *
     * Scale shape: the exact graph is the oracle baseline; at scale
-    * the same votes run over knnGraphLsh's edges (schema-compatible).
+    * the same votes run over knnGraphLshIH's edges (schema-compatible).
     * Votes = one edge-keyed join + (query, label) partial agg; the
     * verdict join is query-keyed. */
   private val qLabelNoise = BoundQuery("q_label_noise", (s, d) => {

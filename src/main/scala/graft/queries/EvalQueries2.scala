@@ -53,7 +53,7 @@ object EvalQueries2 {
     * separable and teach nothing). The label filter applies inside
     * the scored join, BEFORE ranking, so rank k is the k-th true
     * negative. Exact baseline; at 100 TB the same label filter drops
-    * into knnGraphLsh's bucket join (blocking is label-oblivious, so
+    * into knnGraphLshIH's bucket join (blocking is label-oblivious, so
     * recall is unchanged). */
   private val qHardNegatives = BoundQuery("q_hard_negatives", (s, d) => {
     Similarity.hardNegatives(Tables.embeddings(s, d), col("vec_id"),

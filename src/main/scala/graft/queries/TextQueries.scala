@@ -80,8 +80,7 @@ object TextQueries {
     * shingle hash, 32 affine permutations, band keys, estimates — is
     * replayed term-for-term by the DuckDB oracle below: a FULL
     * hash-checked gate on an approximate operator, not rows-only.
-    * TextSpec separately checks recall vs exact jaccard pairs (both
-    * this and the faster xxhash64 production variant). */
+    * TextSpec separately checks recall vs exact jaccard pairs. */
   private val qMinhashPairs = BoundQuery("q_minhash_pairs", (s, d) => {
     Dedup.minhashCandidatesArith(Tables.documents(s, d), col("doc_id"), col("text"))
       .where(col("jaccard_est") >= 0.5)
@@ -139,13 +138,12 @@ object TextQueries {
   """
   }
 
-  /** SimHash near-dup pairs. Bound to the polynomial-signature twin
+  /** SimHash near-dup pairs over the polynomial signature
     * (Dedup.simhashPairsArith / expressions.SimHashPoly62) so the
     * whole pipeline — per-token dual code-point folds, 62-bit ±1
     * vote, pigeonhole band blocking (COMPLETE for hamming ≤ 3),
     * hamming verify — is replayed by the DuckDB oracle: a full
-    * hash-checked gate. DedupSpec pins the xxhash64 production
-    * variant (simhashPairs) separately. */
+    * hash-checked gate. */
   private val qSimhashPairs = BoundQuery("q_simhash_pairs", (s, d) => {
     Dedup.simhashPairsArith(Tables.documents(s, d), col("doc_id"), col("text"), maxHamming = 3)
       .orderBy("id_a", "id_b")

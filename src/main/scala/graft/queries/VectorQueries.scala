@@ -52,29 +52,27 @@ object VectorQueries {
     * at 10×. Exact verification means every emitted pair is a true
     * pair at tau.
     *
-    * FULL ORACLE since r4: the planes are the Irwin–Hall INTEGER
-    * family (Similarity.lshCosinePairsAutoIH — CLT-Gaussian sums of
-    * four affine-hash uniforms, exact long arithmetic), the sizing
-    * replays integrally (integer plane comparison + a Scala-generated
+    * Full oracle: the planes are the Irwin–Hall INTEGER family
+    * (Similarity.lshCosinePairsAutoIH — CLT-Gaussian sums of four
+    * affine-hash uniforms, exact long arithmetic), the sizing replays
+    * integrally (integer plane comparison + a Scala-generated
     * planes→tables CASE), and the maxBucket window, banding and
-    * rounded-cosine verify replay term-for-term. The seeded-Gaussian
-    * variant stays in the library (lshCosinePairsAuto) for callers
-    * wanting float planes; VectorSpec pins recall ≥ floor for both
-    * families. */
+    * rounded-cosine verify replay term-for-term. VectorSpec pins
+    * subset precision and a recall floor. */
   private val qLshCosinePairs = BoundQuery("q_lsh_cosine_pairs", (s, d) => {
     Similarity.lshCosinePairsAutoIH(Tables.embeddings(s, d), col("vec_id"), col("embedding"),
       tau = 0.4, dim = 64)
       .orderBy("id_a", "id_b")
   }, Some(DuckVectorSql.ihLshPairsSql(tau = 0.4, dim = 64)), headline = true)
 
-  /** Arithmetic-hyperplane LSH twin of q_lsh_cosine_pairs: Rademacher
-    * ±1 planes from a published affine family over exact micro-int
+  /** Banded cosine LSH with fixed planes/tables and Rademacher ±1
+    * planes from a published affine family over exact micro-int
     * vectors (Similarity.arithLshCosinePairs), so DuckDB replays the
     * ENTIRE pipeline — signatures, banding, bucket join, cosine
-    * verify — term for term. This upgrades banded cosine LSH from
-    * rows-only+spec to engine-proven; the seeded-Gaussian production
-    * variant stays the headline (its auto-sizing and maxBucket guard
-    * are the 100 TB knobs; this twin pins the algorithm). */
+    * verify — term for term. The headline is q_lsh_cosine_pairs
+    * (Irwin–Hall planes), whose auto-sizing and maxBucket guard are
+    * the 100 TB knobs; this query pins the same banded algorithm with
+    * a second coefficient family and no cap. */
   private val qLshCosineArith = BoundQuery("q_lsh_cosine_arith", (s, d) => {
     Similarity.arithLshCosinePairs(Tables.embeddings(s, d), col("vec_id"), col("embedding"),
       tau = 0.4, dim = 64, planes = 4, tables = 8)
@@ -160,7 +158,7 @@ object VectorQueries {
 
   /** LSH-bucketed kNN graph — the SCALE path: banded sign-signature
     * candidate buckets + exact rescoring, never an all-pairs compare.
-    * FULL ORACLE since r4 via the Irwin–Hall integer planes
+    * Full oracle via the Irwin–Hall integer planes
     * (Similarity.knnGraphLshIH — see q_lsh_cosine_pairs); VectorSpec
     * pins per-edge recall vs the exact graph above. */
   private val qKnnGraphLsh = BoundQuery("q_knn_graph_lsh", (s, d) => {
@@ -607,7 +605,7 @@ object VectorQueries {
     * shuffles once on cluster id and compares within clusters only.
     * Cluster sizes are the knob: K grows with n (paper uses √n) so
     * per-cluster work stays pinned; a skew guard would cap degenerate
-    * clusters the way lshCosinePairs.maxBucket does. */
+    * clusters the way lshCosinePairsIH's maxBucket does. */
   private val qSemDedup = BoundQuery("q_semdedup", (s, d) => {
     val K = 8
     val tau = 0.4
@@ -748,7 +746,7 @@ object VectorQueries {
     * Scale shape: in-degree = one partial-agg shuffle over the kNN
     * edge list (n·k rows); the histogram is a second ≤max-degree-row
     * agg. The edge list itself comes from the brute-force builder at
-    * oracle scale and from knnGraphLsh at 100 TB (same schema — the
+    * oracle scale and from knnGraphLshIH at 100 TB (same schema — the
     * audit is index-agnostic). */
   private val qHubness = BoundQuery("q_hubness", (s, d) => {
     val e = Tables.embeddings(s, d)

@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** Size-gated broadcast hints (round-6 advice item 1).
+/** Size-gated broadcast hints.
   *
   * The tpch plan fixes hinge on broadcasting a FILTERED slice of a
   * fact-adjacent table (q10's quarter of orders, q8's two-year ASIA
@@ -30,58 +30,34 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Hints {
 
-  /** 128 MB ceiling, MEASURED not guessed (round-8, sf100 A/B under
-    * bench confs): q8's ~141 MB-estimate / 8.6M-row ordered-slice
-    * build ran 23.2 s armed vs 13.4 s disarmed — past the 100 MB
-    * class, building + cache-missing into a multi-million-entry hash
-    * map loses to the 32-way sort-merge it replaces — while q10's
-    * ~94 MB-estimate / 5.9M-row build ran 11.0 s armed vs 26.9 s
-    * disarmed. The EFFECTIVE default cap also tracks the session's own
-    * autoBroadcastJoinThreshold (round-7 verdict item: a fixed
-    * many-× cap could arm a build the engine itself would refuse, and
-    * retuning the conf silently widened the gap): min(2×threshold,
-    * 128 MB) — a deliberate hint may exceed the AUTO threshold, but
-    * only by a fixed factor that tracks the conf, never unbounded. */
+  /** 128 MB ceiling, measured with an sf100 A/B under the bench confs:
+    * q8's ~141 MB-estimate / 8.6M-row ordered-slice build ran 23.2 s
+    * armed vs 13.4 s disarmed — past the 100 MB class, building +
+    * cache-missing into a multi-million-entry hash map loses to the
+    * 32-way sort-merge it replaces — while q10's ~94 MB-estimate /
+    * 5.9M-row build ran 11.0 s armed vs 26.9 s disarmed. The
+    * effective default cap also tracks the session's own
+    * autoBroadcastJoinThreshold (see `defaultCap`), so a hint can
+    * never arm a build far beyond what the engine itself would
+    * accept. */
   val DefaultCapBytes: Long = 128L << 20
 
   /** Effective default cap for `session`: min(2 × the session's
-    * autoBroadcastJoinThreshold, DefaultCapBytes). A DISABLED (-1/0)
-    * threshold DISARMS the gate entirely (cap 0 — round-9 advice
-    * item): an operator who set autoBroadcastJoinThreshold=-1 is
-    * telling the engine "never build a broadcast hash map here"
-    * (usually an OOM mitigation), and a library-forced hint up to the
-    * static ceiling would override exactly that decision. An explicit
-    * `capBytes` argument still wins — that's the caller saying they
-    * know better for one specific build. */
+    * autoBroadcastJoinThreshold, DefaultCapBytes). A deliberate hint
+    * may exceed the AUTO threshold, but only by a fixed factor that
+    * tracks the conf. A DISABLED (-1/0) threshold DISARMS the gate
+    * entirely (cap 0): an operator who set
+    * autoBroadcastJoinThreshold=-1 is telling the engine "never build
+    * a broadcast hash map here" (usually an OOM mitigation), and a
+    * library-forced hint up to the static ceiling would override
+    * exactly that decision. An explicit `capBytes` argument still
+    * wins — that's the caller saying they know better for one
+    * specific build. The threshold is read through the session's
+    * SQLConf, which parses every byte unit Spark accepts. */
   private[graft] def defaultCap(session: org.apache.spark.sql.SparkSession): Long = {
-    val t = session.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val bytes = parseBytes(t)
+    val bytes = session.sessionState.conf.autoBroadcastJoinThreshold
     if (bytes <= 0L) 0L
     else math.min(DefaultCapBytes, 2L * bytes)
-  }
-
-  /** Spark byte-string conf values → bytes: "64m", "100MB", "1gb",
-    * "10485760", "10485760b", "1t"… — the single- and double-letter
-    * unit forms Spark's bytesConf grammar accepts (review fix: the
-    * first cut only stripped one trailing letter, so a legal "100MB"
-    * threshold crashed every gatedBroadcast query at construction). */
-  private[graft] def parseBytes(s: String): Long = {
-    val t0 = s.trim.toLowerCase
-    // optional trailing 'b' ("mb"/"kb"/…); a bare trailing 'b' with no
-    // unit letter before it means plain bytes ("123b")
-    val (t, sawB) =
-      if (t0.endsWith("b")) (t0.dropRight(1), true) else (t0, false)
-    val (num, mult) =
-      if (t.endsWith("k")) (t.dropRight(1), 1L << 10)
-      else if (t.endsWith("m")) (t.dropRight(1), 1L << 20)
-      else if (t.endsWith("g")) (t.dropRight(1), 1L << 30)
-      else if (t.endsWith("t")) (t.dropRight(1), 1L << 40)
-      else if (t.endsWith("p")) (t.dropRight(1), 1L << 50)
-      else (t, 1L)
-    val n = num.trim.toLongOption.getOrElse(
-      sys.error(s"unparseable byte-string conf value: '$s'"))
-    if (sawB && mult == 1L) n // "123b"
-    else n * mult
   }
 
   def gatedBroadcast(slim: DataFrame, scanProxy: DataFrame,
@@ -91,10 +67,7 @@ object Hints {
       s"selectivity must be in (0,1]: $selectivity")
     val cap = if (capBytes >= 0L) capBytes else defaultCap(slim.sparkSession)
     val bytes = scanProxy.queryExecution.optimizedPlan.stats.sizeInBytes
-    val unknownAt = BigInt(
-      slim.sparkSession.conf.get("spark.sql.defaultSizeInBytes",
-        Long.MaxValue.toString))
-    val known = bytes < unknownAt
+    val known = bytes < BigInt(slim.sparkSession.sessionState.conf.defaultSizeInBytes)
     if (known && bytes.toDouble * selectivity < cap.toDouble)
       broadcast(slim)
     else slim

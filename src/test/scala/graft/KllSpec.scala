@@ -65,7 +65,7 @@ class KllSpec extends AnyFunSuite {
   }
 
   test("kll functions register for SQL") {
-    register(spark)
+    graft.expressions.GraftExtensions.registerAll(spark)
     val r = spark.sql(
       "SELECT kll_quantile(kll_agg(CAST(id AS DOUBLE), 1024), CAST(0.5 AS DOUBLE)) FROM range(1, 101)")
       .first().getDouble(0)

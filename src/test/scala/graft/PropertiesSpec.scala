@@ -133,7 +133,7 @@ class PropertiesSpec extends AnyFunSuite {
   test("null inputs propagate as nulls through the custom expressions") {
     graft.expressions.GraftExtensions.registerAll(spark)
     val r = spark.sql(
-      """SELECT simhash64(CAST(NULL AS ARRAY<STRING>)) AS a,
+      """SELECT simhash_poly62(CAST(NULL AS ARRAY<STRING>)) AS a,
         |       dot_product(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D)) AS b,
         |       shingle_hash64(CAST(NULL AS ARRAY<STRING>), 2) AS c""".stripMargin)
       .collect()(0)

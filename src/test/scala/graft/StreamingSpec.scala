@@ -524,7 +524,7 @@ class StreamingSpec extends AnyFunSuite {
     graft.expressions.GraftExtensions.registerAll(spark)
     val r = spark.sql(
       """SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
-        |       simhash64(array('a','b')) AS s,
+        |       simhash_poly62(array('a','b')) AS s,
         |       size(shingle_hash64(array('a','b','c'), 2)) AS n""".stripMargin)
       .collect()(0)
     assert(r.getDouble(0) == 11.0)
@@ -541,6 +541,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(r2.getLong(1) == ((1L << 0) | (1L << 2)),
       "sign bits: positive dims 0 and 2 set, negative dim 1 clear")
     assert(r2.getInt(2) == 2)
+  }
+
+  test("GraftExtensions.registerAll registers every FnRegistry face") {
+    import scala.jdk.CollectionConverters._
+    val face = """new FnRegistry\("([a-z0-9_]+)"""".r
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/expressions")
+    val names = java.nio.file.Files.list(dir).iterator().asScala.toSeq
+      .flatMap(p => face.findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1)))
+    assert(names.size >= 14, s"face scan found only $names")
+    // a fresh session: the shared one already carries faces other specs used
+    val fresh = spark.newSession()
+    graft.expressions.GraftExtensions.registerAll(fresh)
+    val missing = names.filterNot(n => fresh.catalog.functionExists(n))
+    assert(missing.isEmpty, s"registerAll misses $missing")
   }
 
   test("streaming transition bigrams replayed equal the batch transition counts") {

@@ -101,37 +101,48 @@ class ToolsGradingSpec extends AnyFunSuite {
   }
 
   test("Hints default cap tracks the session's autoBroadcastJoinThreshold") {
-    assert(util.Hints.parseBytes("64m") == 64L << 20)
-    assert(util.Hints.parseBytes("10485760") == 10485760L)
-    assert(util.Hints.parseBytes("1g") == 1L << 30)
-    assert(util.Hints.parseBytes("512k") == 512L << 10)
-    // Spark's bytesConf grammar also accepts the two-letter unit forms
-    // (review fix: "100MB" used to throw at query-construction time)
-    assert(util.Hints.parseBytes("100MB") == 100L << 20)
-    assert(util.Hints.parseBytes("64kb") == 64L << 10)
-    assert(util.Hints.parseBytes("2gb") == 2L << 30)
-    assert(util.Hints.parseBytes("1t") == 1L << 40)
-    assert(util.Hints.parseBytes("123b") == 123L)
     // min(2×threshold, 128 MB): a 64 MB threshold caps the gate at
     // 128 MB; a 10 MB threshold caps it at 20 MB; disabled (-1/0)
-    // DISARMS the gate (round-9 advice: an operator who disabled
-    // broadcast joins must not get library-forced broadcasts; the
-    // 128 MB class boundary is the sf100 q8/q10 A/B — see
-    // Hints.DefaultCapBytes)
+    // DISARMS the gate (an operator who disabled broadcast joins must
+    // not get library-forced broadcasts; the 128 MB class boundary is
+    // the sf100 q8/q10 A/B — see Hints.DefaultCapBytes)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      assert(util.Hints.defaultCap(spark) == 2L * 10485760L)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1g")
-      assert(util.Hints.defaultCap(spark) == util.Hints.DefaultCapBytes,
-        "the 128 MB ceiling binds when 2×threshold exceeds it")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(util.Hints.defaultCap(spark) == 0L,
-        "a disabled threshold disarms the gate entirely")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "0")
-      assert(util.Hints.defaultCap(spark) == 0L,
-        "a zero threshold disarms the gate entirely")
+      // every byte unit of Spark's bytesConf grammar, one- and two-letter
+      def capAt(threshold: String): Long = {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        util.Hints.defaultCap(spark)
+      }
+      val ceiling = util.Hints.DefaultCapBytes
+      assert(capAt("64m") == 128L << 20)
+      assert(capAt("10485760") == 2L * 10485760L)
+      assert(capAt("1g") == ceiling, "the 128 MB ceiling binds when 2×threshold exceeds it")
+      assert(capAt("512k") == 1L << 20)
+      assert(capAt("100MB") == ceiling)
+      assert(capAt("64kb") == 128L << 10)
+      assert(capAt("2gb") == ceiling)
+      assert(capAt("1t") == ceiling)
+      assert(capAt("123b") == 246L)
+      assert(capAt("-1") == 0L, "a disabled threshold disarms the gate entirely")
+      assert(capAt("0") == 0L, "a zero threshold disarms the gate entirely")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("Hints.gatedBroadcast reads defaultSizeInBytes in any Spark byte unit") {
+    val slim = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val proxy = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    // getAll holds only explicitly set confs: restore "unset" as unset
+    val prev = spark.conf.getAll.get("spark.sql.defaultSizeInBytes")
+    try {
+      spark.conf.set("spark.sql.defaultSizeInBytes", "1t")
+      val armed = util.Hints.gatedBroadcast(slim, proxy, selectivity = 1.0)
+      assert(armed.queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.nonEmpty, "known small proxy stats under a 1t sentinel must arm the hint")
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.defaultSizeInBytes", v)
+      case None => spark.conf.unset("spark.sql.defaultSizeInBytes")
+    }
   }
 
   test("Hints.gatedBroadcast disarms when the proxy's stats are unknown") {

@@ -177,7 +177,8 @@ class VectorSpec extends AnyFunSuite {
   test("LSH cosine pairs are a subset of exact pairs at the same tau") {
     val exact = Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.35)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val lsh = Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"), 0.35, dim = 64)
+    val lsh = Similarity.lshCosinePairsIH(emb, col("vec_id"), col("embedding"), 0.35,
+        dim = 64, planes = 8, tables = 1)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(lsh.subsetOf(exact))
     assert(exact.isEmpty || lsh.nonEmpty)
@@ -188,7 +189,7 @@ class VectorSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("cosine"))
       .toMap
-    val lsh = Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"),
+    val lsh = Similarity.lshCosinePairsIH(emb, col("vec_id"), col("embedding"),
         tau = 0.4, dim = 64, planes = 5, tables = 16)
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("cosine"))
@@ -198,7 +199,7 @@ class VectorSpec extends AnyFunSuite {
     lsh.foreach { case (k, c) => assert(c == exact(k)) }
     // theory: per-plane collision p = 1-acos(0.4)/pi ≈ 0.631 at the
     // threshold (higher above it), recall ≥ 1-(1-p^5)^16 ≈ 0.81.
-    // 0.55 floors it with slack for the finite-sample draw.
+    // 0.55 floors it with slack for the finite Irwin–Hall plane draw.
     val recall = lsh.size.toDouble / exact.size
     assert(recall >= 0.55, s"banded LSH recall $recall (${lsh.size}/${exact.size})")
   }
@@ -220,18 +221,6 @@ class VectorSpec extends AnyFunSuite {
     // 0.5 floors it for the finite ±1-family draw.
     val recall = arith.size.toDouble / exact.size
     assert(recall >= 0.5, s"arith LSH recall $recall (${arith.size}/${exact.size})")
-  }
-
-  test("auto-sized LSH meets its recall target with subset precision") {
-    val exact = Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val lsh = Similarity.lshCosinePairsAuto(emb, col("vec_id"), col("embedding"),
-        tau = 0.4, dim = 64)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(lsh.subsetOf(exact))
-    // target 0.8 with finite-sample slack
-    val recall = lsh.size.toDouble / exact.size
-    assert(recall >= 0.55, s"auto LSH recall $recall (${lsh.size}/${exact.size})")
   }
 
   test("Irwin-Hall auto-sized LSH (the q_lsh_cosine_pairs binding): subset + recall") {
@@ -258,40 +247,17 @@ class VectorSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"))).toSet
     val ih = Similarity.knnGraphLshIH(emb, col("vec_id"), col("embedding"),
         k = k, tau = 0.2, dim = 64).collect()
+    // at most k neighbors per node, ranked contiguously from 1
     ih.groupBy(_.getAs[Long]("query_id")).values.foreach { g =>
       assert(g.length <= k)
       assert(g.map(_.getAs[Long]("rnk")).sorted.toSeq == (1L to g.length))
     }
+    // every emitted edge carries the exact rescored cosine >= tau (rounded)
+    assert(ih.forall(_.getAs[Double]("cosine") >= 0.2 - 1e-6))
     val ihSet = ih.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"))).toSet
     val hit = exact.count(ihSet)
     assert(hit.toDouble / exact.size >= 0.7,
       s"IH kNN-graph recall ${hit.toDouble / exact.size} ($hit/${exact.size})")
-  }
-
-  test("LSH kNN graph: per-node k cap, exact scores, recall vs exact graph") {
-    val k = 5
-    val exact = Similarity.bruteForceTopK(emb, col("vec_id"), col("embedding"),
-        emb, col("vec_id"), col("embedding"), k)
-      .where(col("cosine") > 0.3)
-      .collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id")) -> r.getAs[Double]("cosine"))
-      .toMap
-    val lsh = Similarity.knnGraphLsh(emb, col("vec_id"), col("embedding"),
-        k = k, tau = 0.2, dim = 64)
-      .collect()
-    // at most k neighbors per node, ranked contiguously from 1
-    lsh.groupBy(_.getAs[Long]("query_id")).values.foreach { g =>
-      assert(g.length <= k)
-      assert(g.map(_.getAs[Long]("rnk")).sorted.toSeq == (1L to g.length))
-    }
-    // every emitted edge carries the exact rescored cosine >= tau (rounded)
-    assert(lsh.forall(_.getAs[Double]("cosine") >= 0.2 - 1e-6))
-    // recall of the confidently-similar exact edges (cosine > 0.3,
-    // well above tau so bucket-miss is the only loss mode)
-    val lshSet = lsh.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"))).toSet
-    val hit = exact.keys.count(lshSet)
-    assert(hit.toDouble / exact.size >= 0.7,
-      s"kNN-graph recall ${hit.toDouble / exact.size} ($hit/${exact.size})")
   }
 
   test("PQ ADC top-k recalls most of the exact L2 top-k") {

@@ -37,8 +37,6 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("Dedup joins on empty corpora are empty, not exceptions") {
     assert(Dedup.ngramJaccardPairs(emptyDocs, col("doc_id"), col("text"),
       shingleSize = 3, minJaccard = 0.5).count() == 0)
-    assert(Dedup.minhashCandidates(emptyDocs, col("doc_id"), col("text")).count() == 0)
-    assert(Dedup.simhashPairs(emptyDocs, col("doc_id"), col("text")).count() == 0)
   }
 
   test("Dedup ignores docs shorter than the shingle size") {
@@ -55,7 +53,9 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("auto-sized LSH on an empty collection is empty") {
     val emptyVecs = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
-    assert(Similarity.lshCosinePairsAuto(emptyVecs, col("vec_id"), col("embedding"),
+    assert(Similarity.lshCosinePairsAutoIH(emptyVecs, col("vec_id"), col("embedding"),
+      tau = 0.5, dim = 2).count() == 0)
+    assert(Similarity.arithLshCosinePairs(emptyVecs, col("vec_id"), col("embedding"),
       tau = 0.5, dim = 2).count() == 0)
   }
 
