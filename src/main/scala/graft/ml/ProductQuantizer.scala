@@ -8,7 +8,7 @@ import graft.functions.VectorFunctions.toDouble
   * path when raw vectors stop fitting in executor memory (Jégou et
   * al., "Product Quantization for Nearest Neighbor Search", TPAMI
   * 2011). The d-dim space is split into m subspaces; each gets a
-  * k-centroid codebook (deterministic KMeansLite per subspace); a
+  * k-centroid codebook (KMeansLite's deterministic Lloyd loop); a
   * vector compresses to m small codes (64 floats -> 4 bytes here,
   * 64x). Queries score candidates with asymmetric distance (ADC):
   * per-subspace lookup tables of query-to-centroid distances, summed
@@ -23,141 +23,45 @@ object ProductQuantizer {
   /** codebooks(j)(c) = centroid c of subspace j. */
   final case class Codebooks(m: Int, subDim: Int, cents: Array[Array[Array[Double]]])
 
-  private def sqDistTo(sub: Column, cent: Array[Double]): Column =
-    // native codegen'd Σ(x−y)² — bit-identical fold (SqDist Scaladoc)
-    graft.expressions.SqDist.sqDist(sub, array(cent.map(lit): _*))
-
   /** Train one codebook per subspace with deterministic k-means —
-    * JOINTLY: all m subspaces ride one exploded (j, subvector) frame,
-    * so each training iteration is ONE Spark job instead of m
-    * (round-6: the per-subspace KMeansLite loop issued ~5 driver-
-    * coordinated jobs per subspace — m=8 × 5 ≈ 40 sequential jobs
-    * whose ~0.2 s scheduling floor, not compute, was 10 of
-    * q_ivf_pq's 12 s at sf0.1). Numerically IDENTICAL to the
-    * per-subspace loop: the init is the same lowest-k-id rows sliced
-    * per subspace, each (j, cluster, pos) mean averages exactly the
-    * same rows, and the same round-to-9 parity anchor applies — so
+    * jointly: all m subspaces ride one exploded (j, subvector) frame
+    * of KMeansLite's Lloyd loop, so each training iteration is ONE
+    * Spark job instead of m. Numerically identical to m separate
+    * KMeansLite.fit runs, one per slice: the init is the same lowest-k-id
+    * rows sliced per subspace, each (j, cluster, pos) mean averages
+    * exactly the same rows with the same round-to-9 parity anchor — so
     * the DuckDB oracle replay of train→encode→ADC is unchanged. */
   def train(df: DataFrame, idCol: Column, vecCol: Column,
-            m: Int, k: Int, iters: Int): Codebooks = {
-    // init = lowest-id k rows, sliced per subspace (exactly the init
-    // each per-subspace KMeansLite.fit would have collected); dim
-    // reads off the first init vector — no separate dimension job
-    val initRows = df.select(idCol.as("id"), toDouble(vecCol).as("v"))
-      .orderBy("id").limit(k).collect().map(_.getSeq[Double](1).toArray)
-    require(initRows.nonEmpty, "PQ training needs a non-empty collection")
-    val dim = initRows.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subDim = dim / m
-    var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      initRows.map(_.slice(j * subDim, (j + 1) * subDim))
-    }
-    // one row per (vector, subspace): iterations replay the argmin
-    // over this cache — Spread first so a file-bound single partition
-    // can't serialize the whole loop through one core
-    val data = graft.util.CacheScope.persist(
-      graft.util.Spread(df.select(toDouble(vecCol).as("v")))
-        .select(explode(array((0 until m).map { j =>
-          struct(lit(j).as("j"), slice(col("v"), j * subDim + 1, subDim).as("sub"))
-        }: _*)).as("e"))
-        .select(col("e.j").as("j"), col("e.sub").as("sub")))
-    // per-row argmin against THIS subspace's centroids only: a when-
-    // chain on j, so codegen evaluates one subspace's k distances per
-    // row (same work per row as the per-subspace loop)
-    def assignCol: Column = {
-      def argminFor(j: Int): Column =
-        sort_array(array(cents(j).zipWithIndex.map { case (c, i) =>
-          struct(sqDistTo(col("sub"), c).as("d"), lit(i).as("c"))
-        }: _*))(0)("c")
-      (1 until m).foldLeft(when(col("j") === 0, argminFor(0))) {
-        case (acc, j) => acc.when(col("j") === j, argminFor(j))
-      }
-    }
-    var it = 0
-    while (it < iters) {
-      // same round-to-9 cross-engine parity anchor as KMeansLite
-      val means = data.withColumn("cluster", assignCol)
-        .select(col("j"), col("cluster"), posexplode(col("sub")).as(Seq("pos", "x")))
-        .groupBy("j", "cluster", "pos").agg(round(avg("x"), 9).as("mn"))
-        .collect() // m·k·subDim rows — the whole model, driver-tiny
-      val next = cents.map(_.clone())
-      means.groupBy(r => (r.getInt(0), r.getInt(1))).foreach {
-        case ((j, cl), rows) =>
-          val mean = next(j)(cl).clone()
-          rows.foreach(r => mean(r.getInt(2)) = r.getDouble(3))
-          next(j)(cl) = mean
-      }
-      cents = next
-      it += 1
-    }
-    Codebooks(m, subDim, cents)
-  }
+            m: Int, k: Int, iters: Int): Codebooks =
+    trainGroups(df, idCol, vecCol, m, k, iters, None)._1
 
-  /** Train the PQ codebooks AND a full-vector coarse quantizer (the
-    * IVF half of IVF-PQ) in the SAME exploded frame: subspace rows
-    * j = 0..m-1 carry the PQ slices, j = m carries the whole vector,
-    * and every training iteration is ONE job for both models
-    * (round-6: ivfPqTopK ran two sequential trainer loops — ~8
-    * driver-blocking collects where 4 suffice). Numerically
-    * IDENTICAL to KMeansLite.fit + train run separately: same
-    * lowest-id inits, the same per-(j, cluster, pos) rounded means
-    * over the same rows, and the coarse argmin is KMeansLite's own
-    * assignExpr — so the unrolled DuckDB oracle of the composition
-    * is untouched. Returns (codebooks, coarse centroids). */
-  def trainWithCoarse(df: DataFrame, idCol: Column, vecCol: Column,
-                      m: Int, k: Int, iters: Int, coarseK: Int)
-      : (Codebooks, Array[Array[Double]]) = {
-    val initRows = df.select(idCol.as("id"), toDouble(vecCol).as("v"))
-      .orderBy("id").limit(math.max(k, coarseK)).collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(initRows.nonEmpty, "PQ training needs a non-empty collection")
-    val dim = initRows.head.length
+  /** `train`, plus — for `coarseK = Some(n)` — an n-centroid
+    * full-vector group j = m on the same frame: the IVF-PQ coarse
+    * quantizer, equal to KMeansLite.fit over the same vectors, trained
+    * in the same jobs as the codebooks. */
+  private[graft] def trainGroups(df: DataFrame, idCol: Column, vecCol: Column,
+      m: Int, k: Int, iters: Int, coarseK: Option[Int])
+      : (Codebooks, Option[Array[Array[Double]]]) = {
+    val vecs = df.select(idCol.as("id"), toDouble(vecCol).as("v"))
+    val init = KMeansLite.seeds[Double](vecs, (k +: coarseK.toSeq).max)
+    val dim = init.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
-    var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      initRows.take(k).map(_.slice(j * subDim, (j + 1) * subDim))
-    }
-    var coarse: Array[Array[Double]] = initRows.take(coarseK)
+    val groups = (0 until m).map(j => slice(col("v"), j * subDim + 1, subDim)) ++
+      coarseK.map(_ => col("v"))
+    // one row per (vector, group): iterations replay the argmin over
+    // this cache — Spread first so a file-bound single partition can't
+    // serialize the whole loop through one core
     val data = graft.util.CacheScope.persist(
-      graft.util.Spread(df.select(toDouble(vecCol).as("v")))
-        .select(explode(array((0 until m).map { j =>
-          struct(lit(j).as("j"), slice(col("v"), j * subDim + 1, subDim).as("sub"))
-        } :+ struct(lit(m).as("j"), col("v").as("sub")): _*)).as("e"))
-        .select(col("e.j").as("j"), col("e.sub").as("sub")))
-    def assignCol: Column = {
-      def argminFor(j: Int): Column =
-        sort_array(array(cents(j).zipWithIndex.map { case (c, i) =>
-          struct(sqDistTo(col("sub"), c).as("d"), lit(i).as("c"))
-        }: _*))(0)("c")
-      (1 until m).foldLeft(when(col("j") === 0, argminFor(0))) {
-        case (acc, j) => acc.when(col("j") === j, argminFor(j))
-      }.when(col("j") === m, KMeansLite.assignExpr(coarse, col("sub")))
-    }
-    var it = 0
-    while (it < iters) {
-      val means = data.withColumn("cluster", assignCol)
-        .select(col("j"), col("cluster"), posexplode(col("sub")).as(Seq("pos", "x")))
-        .groupBy("j", "cluster", "pos").agg(round(avg("x"), 9).as("mn"))
-        .collect() // (m·k·subDim + coarseK·dim) rows — driver-tiny
-      val nextPq = cents.map(_.clone())
-      val nextCoarse = coarse.clone()
-      means.groupBy(r => (r.getInt(0), r.getInt(1))).foreach {
-        case ((j, cl), rows) =>
-          if (j == m) {
-            val mean = nextCoarse(cl).clone()
-            rows.foreach(r => mean(r.getInt(2)) = r.getDouble(3))
-            nextCoarse(cl) = mean
-          } else {
-            val mean = nextPq(j)(cl).clone()
-            rows.foreach(r => mean(r.getInt(2)) = r.getDouble(3))
-            nextPq(j)(cl) = mean
-          }
-      }
-      cents = nextPq
-      coarse = nextCoarse
-      it += 1
-    }
-    (Codebooks(m, subDim, cents), coarse)
+      graft.util.Spread(vecs.select(KMeansLite.checked(col("id"), col("v"), dim).as("v")))
+        .select(explode(array(groups.zipWithIndex.map { case (g, j) =>
+          struct(lit(j).as("j"), g.as("v"))
+        }: _*)).as("e"))
+        .select(col("e.j").as("j"), col("e.v").as("v")))
+    val fitted = KMeansLite.lloyd(data,
+      Array.tabulate(m)(j => init.take(k).map(_.slice(j * subDim, (j + 1) * subDim))) ++
+        coarseK.map(init.take), iters, KMeansLite.roundedMean)
+    (Codebooks(m, subDim, fitted.take(m)), coarseK.map(_ => fitted(m)))
   }
 
   /** Compress every vector to its m nearest-centroid codes. The
@@ -167,14 +71,24 @@ object ProductQuantizer {
   def encode(df0: DataFrame, idCol: Column, vecCol: Column, cb: Codebooks): DataFrame = {
     val df = graft.util.Spread(df0)
     val codeCols = (0 until cb.m).map { j =>
-      val sub = slice(toDouble(vecCol), j * cb.subDim + 1, cb.subDim)
-      val dists = array(cb.cents(j).zipWithIndex.map { case (c, i) =>
-        struct(sqDistTo(sub, c).as("d"), lit(i).as("c"))
-      }: _*)
-      sort_array(dists)(0)("c")
+      KMeansLite.nearest(slice(toDouble(vecCol), j * cb.subDim + 1, cb.subDim),
+        KMeansLite.indexed(cb.cents(j)))("cluster")
     }
     df.select(idCol.as("id"), array(codeCols: _*).as("codes"))
   }
+
+  /** Asymmetric distance of every row's `codes` to query vector `qv`:
+    * per-subspace lookup tables of query-to-centroid squared distances
+    * (literal arrays in the plan), summed by code, rounded to 9
+    * decimals. */
+  private[graft] def adcDistance(cb: Codebooks, qv: Array[Double]): Column =
+    round((0 until cb.m).map { j =>
+      val table = array(cb.cents(j).map { c =>
+        lit(c.zip(qv.slice(j * cb.subDim, (j + 1) * cb.subDim))
+          .map { case (ci, qi) => (ci - qi) * (ci - qi) }.sum)
+      }: _*)
+      element_at(table, element_at(col("codes"), j + 1) + 1)
+    }.reduce(_ + _), 9)
 
   /** ADC top-k: for each (queryId, vector), rank the encoded
     * collection by summed lookup-table distance. The per-query tables
@@ -183,14 +97,7 @@ object ProductQuantizer {
   def adcTopK(encoded: DataFrame, queries: Seq[(Long, Array[Double])],
               cb: Codebooks, kTop: Int): DataFrame = {
     val scored = queries.map { case (qid, qv) =>
-      val approx = (0 until cb.m).map { j =>
-        val table = array(cb.cents(j).map { c =>
-          lit(c.zip(qv.slice(j * cb.subDim, (j + 1) * cb.subDim))
-            .map { case (ci, qi) => (ci - qi) * (ci - qi) }.sum)
-        }: _*)
-        element_at(table, element_at(col("codes"), j + 1) + 1)
-      }.reduce(_ + _)
-      struct(lit(qid).as("query_id"), round(approx, 9).as("adist"))
+      struct(lit(qid).as("query_id"), adcDistance(cb, qv).as("adist"))
     }
     val exploded = encoded
       .select(col("id"), explode(array(scored: _*)).as("q"))

@@ -346,16 +346,14 @@ object Similarity {
                 m: Int = 8, kCodes: Int = 16, iters: Int = 3): DataFrame = {
     import graft.ml.{KMeansLite, ProductQuantizer}
     val c = CacheScope.persist(spread(normed(collection, colId, colVec)))
-    // fused trainer: coarse quantizer + all m PQ codebooks learn on
-    // ONE exploded frame — 1 collect per iteration instead of 2
-    // sequential trainer loops, numerically identical to
-    // KMeansLite.fit + ProductQuantizer.train (same inits, same
-    // rounded means, same argmin expression), so the unrolled DuckDB
+    // coarse quantizer + all m PQ codebooks learn on ONE exploded
+    // frame (group j = m is the whole vector), numerically identical to
+    // KMeansLite.fit + ProductQuantizer.train, so the unrolled DuckDB
     // oracle replay of the composition is unchanged
-    val (cb, coarseCents) = ProductQuantizer.trainWithCoarse(
-      c, col("id"), col("vn"), m, kCodes, iters, nCells)
-    val model = KMeansLite.Model(coarseCents,
-      c.select(col("id"), KMeansLite.assignExpr(coarseCents, col("vn")).as("cluster")))
+    val (cb, coarse) = ProductQuantizer.trainGroups(
+      c, col("id"), col("vn"), m, kCodes, iters, Some(nCells))
+    val model = KMeansLite.Model(coarse.get, c.select(col("id"),
+      KMeansLite.nearest(col("vn"), KMeansLite.indexed(coarse.get))("cluster").as("cluster")))
     val encoded = ProductQuantizer.encode(c, col("id"), col("vn"), cb)
       .join(model.assignments.withColumnRenamed("cluster", "cell"), "id")
     // serving-side handful: query vectors + their probe cells, all
@@ -371,14 +369,7 @@ object Similarity {
       qid -> byDist
     }.toMap
     val scored = qvecs.map { case (qid, qv) =>
-      val adist = (0 until cb.m).map { j =>
-        val table = array(cb.cents(j).map { cent =>
-          lit(cent.zip(qv.slice(j * cb.subDim, (j + 1) * cb.subDim))
-            .map { case (ci, qi) => (ci - qi) * (ci - qi) }.sum)
-        }: _*)
-        element_at(table, element_at(col("codes"), j + 1) + 1)
-      }.reduce(_ + _)
-      struct(lit(qid).as("query_id"), round(adist, 9).as("adist"),
+      struct(lit(qid).as("query_id"), ProductQuantizer.adcDistance(cb, qv).as("adist"),
         array(probes(qid).map(lit): _*).as("cells"))
     }
     val exploded = spread(encoded)

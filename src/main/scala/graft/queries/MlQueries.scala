@@ -6,6 +6,7 @@ import graft.sources.Tables
 import graft.functions.Num.cents
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorFunctions.toDouble
+import graft.ml.KMeansLite
 import graft.operators.TopKPerGroup
 
 /** SURVEY §2.4 round-4 in-engine ML wave: classifiers and compression
@@ -321,73 +322,33 @@ object MlQueries {
     GROUP BY fold ORDER BY fold
   """))
 
-  /** INTEGER k-means — the engine-proven Lloyd twin of the rows-only
-    * KMeansLite (same family move as q_lsh_cosine_arith and
-    * q_minhash_pairs' arithmetic rebind): embeddings scale to exact
-    * micro-unit longs ONCE (round(x·1e6)), then every Lloyd step —
-    * squared distances, argmin assignment (lowest-cluster tiebreak),
-    * centroid update by integral division — is integer arithmetic, so
-    * K=4 / 3 fixed iterations replay bit-exactly in the oracle as
-    * unrolled CTEs (the q_pagerank technique: one Scala loop emits the
-    * recurrence for both engines, so they cannot drift). Output:
-    * per-cluster size, exact within-cluster SSE in squared micro
-    * units, and the centroid's L1 norm — model AND fit quality, all
-    * engine-proven. Truncation-toward-zero division is identical in
-    * Java long division and DuckDB //; micro quantization (1e-6 per
-    * dim) is far below inter-centroid distances.
-    *
-    * Scale shape: per iteration one codegen'd literal-inlined argmin
-    * projection (no broadcast, no join) + one posexplode groupBy on
-    * (cluster, dim) = 256 keys with map-side partials; only k·d longs
-    * ever reach the driver per iteration (the justified KMeansLite
-    * collect). */
   /** The integer k-means loop shared by q_kmeans_arith and the
     * external-eval pair (q_rand_index / q_purity): micro-quantized
     * vectors, centroid update by exact integral-division means, fixed
-    * K / iteration count, lowest-id seeding. Returns the persisted
-    * (id, label, vu) data and the final centroids (K·64 longs — the
+    * K / iteration count, lowest-id seeding — KMeansLite's Lloyd loop
+    * over longs. Returns the persisted (id, label, vu) data and the
+    * final centroids keyed by their Long cluster id (K·64 longs — the
     * justified driver handful). */
   private[queries] def kmeansFit(s: SparkSession, d: String,
       K: Int = 4, iters: Int = 3)
-    : (org.apache.spark.sql.DataFrame, Array[Array[Long]]) = {
-    val data = graft.util.CacheScope.persist(
-      Tables.embeddings(s, d).select(col("vec_id").as("id"),
-        col("label").cast("long").as("label"),
-        transform(toDouble(col("embedding")),
-          x => round(x * 1e6, 0).cast("long")).as("vu")))
-    var cents: Array[Array[Long]] = data.orderBy("id").limit(K)
-      .collect().map(_.getSeq[Long](2).toArray)
-    var it = 0
-    while (it < iters) {
-      val means = data.withColumn("cluster", kmeansAssign(cents)("cluster"))
-        .select(col("cluster"), posexplode(col("vu")).as(Seq("pos", "x")))
-        .groupBy("cluster", "pos")
-        .agg(expr("sum(x) div count(1)").as("m"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("mv"))
-        .select(col("cluster"), transform(col("mv"), s => s("m")).as("mean"))
-        .collect()
-      val next = cents.clone()
-      means.foreach(r =>
-        next(r.getLong(0).toInt) = r.getSeq[Long](1).toArray)
-      cents = next
-      it += 1
-    }
-    (data, cents)
+    : (org.apache.spark.sql.DataFrame, Seq[(Long, Array[Long])]) = {
+    val vecs = Tables.embeddings(s, d).select(col("vec_id").as("id"),
+      col("label").cast("long").as("label"),
+      transform(toDouble(col("embedding")),
+        x => round(x * 1e6, 0).cast("long")).as("vu"))
+    val init = KMeansLite.seeds[Long](vecs.select("id", "vu"), K)
+    val data = graft.util.CacheScope.persist(vecs.withColumn("vu",
+      KMeansLite.checked(col("id"), col("vu"), init.head.length)))
+    val cents = KMeansLite.lloyd(data.select(lit(0).as("j"), col("vu").as("v")),
+      Array(init), iters, integralMean).head
+    (data, cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) })
   }
 
-  /** Nearest-centroid struct (d, cluster) — codegen'd array math with
-    * a centroid literal; sort_array's (d, cluster) ascending order IS
-    * the deterministic tie-break the oracle replays. */
-  private[queries] def kmeansAssign(cents: Array[Array[Long]]): Column = {
-    val dists = array(cents.zipWithIndex.map { case (c, i) =>
-      struct(
-        graft.expressions.SqDist.sqDist(col("vu"), array(c.map(lit): _*))
-          .as("d"),
-        lit(i.toLong).as("cluster"))
-    }: _*)
-    sort_array(dists)(0)
-  }
+  /** Exact centroid coordinate of the integer models: truncating
+    * integral division, identical in Java long division and DuckDB //,
+    * so partition order cannot matter. */
+  private[queries] val integralMean: Column => Column =
+    x => call_function("div", sum(x), count(lit(1)))
 
   /** Shared DuckDB mirror of kmeansFit: v (quantized vectors with the
     * stored label), c0 (lowest-id seeds), then `iters` chained
@@ -434,14 +395,31 @@ object MlQueries {
       WHERE rnk = 1)"""
   }
 
+  /** INTEGER k-means — the engine-proven Lloyd twin of the rows-only
+    * KMeansLite (same family move as q_lsh_cosine_arith and
+    * q_minhash_pairs' arithmetic rebind): embeddings scale to exact
+    * micro-unit longs ONCE (round(x·1e6)), then every Lloyd step —
+    * squared distances, argmin assignment (lowest-cluster tiebreak),
+    * centroid update by integral division — is integer arithmetic, so
+    * K=4 / 3 fixed iterations replay bit-exactly in the oracle as
+    * unrolled CTEs (the q_pagerank technique: one Scala loop emits the
+    * recurrence for both engines, so they cannot drift). Output:
+    * per-cluster size, exact within-cluster SSE in squared micro
+    * units, and the centroid's L1 norm — model AND fit quality, all
+    * engine-proven. Truncation-toward-zero division is identical in
+    * Java long division and DuckDB //; micro quantization (1e-6 per
+    * dim) is far below inter-centroid distances.
+    *
+    * Scale shape: per iteration one codegen'd literal-inlined argmin
+    * projection (no broadcast, no join) + one posexplode groupBy on
+    * (cluster, dim) = 256 keys with map-side partials; only k·d longs
+    * ever reach the driver per iteration (the justified KMeansLite
+    * collect). */
   private val qKmeansArith = BoundQuery("q_kmeans_arith", (s, d) => {
     val (data, cents) = kmeansFit(s, d)
-    def assignCol: org.apache.spark.sql.Column = kmeansAssign(cents)
-    val l1 = cents.zipWithIndex.map { case (c, i) =>
-      (i.toLong, c.map(math.abs).sum)
-    }
-    val l1Df = s.createDataFrame(l1.toSeq).toDF("cluster", "centroid_l1")
-    data.withColumn("a", assignCol)
+    val l1 = cents.map { case (i, c) => (i, c.map(math.abs).sum) }
+    val l1Df = s.createDataFrame(l1).toDF("cluster", "centroid_l1")
+    data.withColumn("a", KMeansLite.nearest(col("vu"), cents))
       .select(col("a.cluster").as("cluster"), col("a.d").as("dist"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_members"), sum(col("dist")).as("sse_u"))
@@ -796,7 +774,7 @@ object MlQueries {
   private val qRandIndex = BoundQuery("q_rand_index", (s, d) => {
     val (data, cents) = kmeansFit(s, d)
     val dec = "decimal(38,0)"
-    val cells = data.withColumn("cluster", kmeansAssign(cents)("cluster"))
+    val cells = data.withColumn("cluster", KMeansLite.nearest(col("vu"), cents)("cluster"))
       .groupBy("cluster", "label").agg(count(lit(1)).as("nij"))
     val sAgg = cells.agg(
       sum(col("nij")).as("n"),
@@ -847,7 +825,7 @@ object MlQueries {
     * scan, then a window over ≤ K·|labels| rows. */
   private val qPurity = BoundQuery("q_purity", (s, d) => {
     val (data, cents) = kmeansFit(s, d)
-    val cells = data.withColumn("cluster", kmeansAssign(cents)("cluster"))
+    val cells = data.withColumn("cluster", KMeansLite.nearest(col("vu"), cents)("cluster"))
       .groupBy("cluster", "label").agg(count(lit(1)).as("nij"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("cluster").orderBy(col("nij").desc, col("label").asc)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.TextFunctions.tokens
+import graft.ml.KMeansLite
 import graft.operators.DbscanGrid
 
 /** SURVEY §2.6 ML wave 2: density clustering and language-model
@@ -161,38 +162,22 @@ object MlQueries2 {
   """))
 
   /** Micro-unit quantized embeddings + per-label centroids (mean by
-    * integral division — exact, partition-invariant). Shared by the
+    * integral division — exact, partition-invariant: KMeansLite's
+    * means pass with the stored label as the cluster). Shared by the
     * two clustering-quality audits below; the collect is k·d longs
     * (10×64 — the q_kmeans_arith justified-driver-handful contract). */
   private def labelCentroids(s: org.apache.spark.sql.SparkSession, d: String)
-    : (org.apache.spark.sql.DataFrame, Array[(Long, Array[Long])]) = {
+    : (org.apache.spark.sql.DataFrame, Seq[(Long, Array[Long])]) = {
     val data = graft.util.CacheScope.persist(
       Tables.embeddings(s, d).select(col("vec_id"),
         col("label").cast("long").as("label"),
         transform(graft.functions.VectorFunctions.toDouble(col("embedding")),
           x => round(x * 1e6, 0).cast("long")).as("vu")))
-    val cents = data
-      .select(col("label"), posexplode(col("vu")).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(expr("sum(x) div count(1)").as("m"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("mv"))
-      .select(col("label"), transform(col("mv"), st => st("m")).as("c"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
+    val cents = KMeansLite.means[Long, Long](data.select(lit(0).as("j"),
+        col("label").as("cluster"), col("vu").as("v")), MlQueries.integralMean)
+      .toSeq.map { case ((_, l), c) => (l, c) }.sortBy(_._1)
     (data, cents)
   }
-
-  /** Squared micro-distance from a point's vu array to each centroid,
-    * as an array of (d2, label) structs — codegen'd array math, no
-    * explode, no shuffle (the q_kmeans_arith assignment shape). */
-  private def distArray(cents: Array[(Long, Array[Long])]) =
-    array(cents.map { case (l, c) =>
-      struct(
-        graft.expressions.SqDist.sqDist(col("vu"), array(c.map(lit): _*))
-          .as("d2"),
-        lit(l).as("cl"))
-    }: _*)
 
   /** Shared DuckDB prelude: quantized vectors + per-label centroids
     * (the exact mirrors of labelCentroids). */
@@ -235,11 +220,11 @@ object MlQueries2 {
   private val qSilhouette = BoundQuery("q_silhouette", (s, d) => {
     val (data, cents) = labelCentroids(s, d)
     val dec = "decimal(38,0)"
-    data.withColumn("ds", distArray(cents))
+    data.withColumn("ds", KMeansLite.distances(col("vu"), cents))
       .select(col("label"),
-        element_at(filter(col("ds"), st => st("cl") === col("label")), 1)("d2")
+        element_at(filter(col("ds"), st => st("cluster") === col("label")), 1)("d")
           .as("a"),
-        sort_array(filter(col("ds"), st => st("cl") =!= col("label")))(0)("d2")
+        sort_array(filter(col("ds"), st => st("cluster") =!= col("label")))(0)("d")
           .as("b"))
       .select(col("label"),
         // 10⁶·(b−a) reaches ~2.6e20 at the d2 ceiling — through decimal
@@ -295,9 +280,9 @@ object MlQueries2 {
   private val qDaviesBouldin = BoundQuery("q_davies_bouldin", (s, d) => {
     val (data, cents) = labelCentroids(s, d)
     val dec = "decimal(38,0)"
-    val scatter = data.withColumn("ds", distArray(cents))
+    val scatter = data.withColumn("ds", KMeansLite.distances(col("vu"), cents))
       .select(col("label"),
-        element_at(filter(col("ds"), st => st("cl") === col("label")), 1)("d2")
+        element_at(filter(col("ds"), st => st("cluster") === col("label")), 1)("d")
           .as("a"))
       .groupBy("label")
       .agg(count(lit(1)).as("n"), sum(col("a").cast(dec)).as("sa"))

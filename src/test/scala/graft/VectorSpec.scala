@@ -334,6 +334,50 @@ class VectorSpec extends AnyFunSuite {
     assert(m1.centroids.length == 4 && m1.centroids.forall(_.length == 64))
   }
 
+  test("k-means rejects a malformed vector by id; a NULL vector still joins cluster 0") {
+    import spark.implicits._
+    import graft.ml.ProductQuantizer
+    // seeds [9,9] and [0,0]; id 7 is the vector under test
+    def frame(v7: Option[Seq[Option[Double]]]) = Seq(
+      1L -> Some(Seq(Some(9.0), Some(9.0))), 2L -> Some(Seq(Some(0.0), Some(0.0))),
+      3L -> Some(Seq(Some(8.0), Some(9.0))), 7L -> v7).toDF("vec_id", "embedding")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for (bad <- Seq(Seq(Some(9.0), Some(9.0), Some(1.0)), Seq(Some(9.0), None))) {
+      val df = frame(Some(bad))
+      val e1 = intercept[Exception](
+        KMeansLite.fit(df, col("vec_id"), col("embedding"), k = 2, iters = 2).assignments.collect())
+      assert(messages(e1).contains("id 7 "), messages(e1))
+      val e2 = intercept[Exception](
+        ProductQuantizer.train(df, col("vec_id"), col("embedding"), m = 2, k = 2, iters = 1))
+      assert(messages(e2).contains("id 7 "), messages(e2))
+    }
+    val got = KMeansLite.fit(frame(None), col("vec_id"), col("embedding"), k = 2, iters = 2)
+      .assignments.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == Map(1L -> 0, 2L -> 1, 3L -> 0, 7L -> 0), got)
+  }
+
+  test("PQ codebook j equals KMeansLite.fit on slice j") {
+    import graft.ml.ProductQuantizer
+    val cb = ProductQuantizer.train(emb, col("vec_id"), col("embedding"), m = 4, k = 4, iters = 2)
+    for (j <- 0 until 4) {
+      val sub = emb.select(col("vec_id"),
+        slice(graft.functions.VectorFunctions.toDouble(col("embedding")), j * 16 + 1, 16).as("s"))
+      val fit = KMeansLite.fit(sub, col("vec_id"), col("s"), k = 4, iters = 2)
+      assert(cb.cents(j).map(_.toSeq).toSeq == fit.centroids.map(_.toSeq).toSeq, s"subspace $j")
+    }
+  }
+
+  test("the coarse group of the joint IVF-PQ fit equals KMeansLite.fit") {
+    import graft.ml.ProductQuantizer
+    val (cb, coarse) = ProductQuantizer.trainGroups(emb, col("vec_id"), col("embedding"),
+      m = 4, k = 4, iters = 2, Some(6))
+    val fit = KMeansLite.fit(emb, col("vec_id"), col("embedding"), k = 6, iters = 2)
+    assert(coarse.get.map(_.toSeq).toSeq == fit.centroids.map(_.toSeq).toSeq)
+    val alone = ProductQuantizer.train(emb, col("vec_id"), col("embedding"), m = 4, k = 4, iters = 2)
+    assert(cb.cents.map(_.map(_.toSeq).toSeq).toSeq == alone.cents.map(_.map(_.toSeq).toSeq).toSeq)
+  }
+
   test("IVF+PQ composed ANN recalls real signal and caps work per query") {
     val ivfpq = Similarity.ivfPqTopK(emb, col("vec_id"), col("embedding"),
         queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10,
