@@ -10,7 +10,7 @@ object Bench {
   /** Best-of-2 pairing rule: a query records a time ONLY when both
     * timed runs succeeded (min of the two); a single failed run voids
     * the pair. Spec-pinned so a fast-fail/slow-pass split can never
-    * record the passing time (round-6 advice item 4). */
+    * record the passing time. */
   private[graft] def pairedTime(a: Option[Double],
                                 b: Option[Double]): Option[Double] =
     (a, b) match {
@@ -50,24 +50,11 @@ object Bench {
         want.toSeq.map(byName)
       case None => queries.Registry.headlines
     }
-    // Best-of-2 timed passes per query, mirroring the DuckDB baseline's
-    // best-of-3 (tools/bench_baseline.py): both engines report their
-    // best observed steady-state latency, so one GC pause or scheduler
-    // hiccup doesn't masquerade as a plan regression (r4's three
-    // "doubled" headliners were exactly that — see BASELINE.md round-5
-    // re-measurement). Timed runs execute with warm plan-matched
-    // operator caches, the SERVING semantics every committed round has
-    // measured (the r1 warm-up pass already primed them for the timed
-    // pass); the scope closing each SECTION (not each run) is what
-    // bounds the memory.
-    // A failed run must NEVER read as a speedup (round-5 advice item;
-    // tightened round 7): a failed query is EXCLUDED from its subtotal
-    // entirely — its JSON time is `null` and the name lands in
-    // `failures` — so neither elapsed-until-exception nor a lucky
-    // second run can leak a partial time into a total. A query whose
-    // two timed runs split (one fail, one pass) counts as FAILED: the
-    // earlier min(once, once) let a fast-fail/slow-pass pair record
-    // the passing time, contradicting the guarantee (round-6 advice).
+    // A failed run must never read as a speedup: a failed query is
+    // excluded from its subtotal entirely — its JSON time is `null`
+    // and its name lands in `failures` — so neither
+    // elapsed-until-exception nor a lucky second run can leak a
+    // partial time into a total (`pairedTime`).
     val failures = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOnce(q: queries.BoundQuery): Option[Double] = {
       val t0 = System.nanoTime()
@@ -81,28 +68,28 @@ object Bench {
         None
       }
     }
-    def timeAll(qs: Seq[queries.BoundQuery]): Seq[(String, Option[Double])] =
-      qs.map(q => q.name -> pairedTime(timeOnce(q), timeOnce(q)))
-    // Untimed warm-up pass first: materializes every table's cache and
-    // JITs each query's generated code, so the timed passes measure the
-    // steady-state service latency (the reference's serving shape —
-    // main.py:147 serves from a warm cache), not first-hit compilation
-    // noise. Warm-up and timed passes share one SECTION scope: internal
-    // caches stay warm across a query's runs, but are all dropped
-    // before the next section (measured: tpch10 queries read ~1 s
-    // higher after the 12 headliners' LSH/shingle caches than
-    // isolated).
-    val results = graft.util.CacheScope.withScope {
-      hs.foreach { q =>
-        try q.run(spark, sfDir).count()
-        catch { case _: Throwable => () }
+    // One timed section. An untimed warm-up pass first materializes
+    // every table's cache and JITs each query's generated code, so the
+    // timed passes measure steady-state service latency (the
+    // reference serves from a warm cache, main.py:147), not
+    // first-hit compilation. Then best-of-2 per query, mirroring the
+    // DuckDB baseline's best-of-3 (tools/bench_baseline.py), so one GC
+    // pause or scheduler hiccup does not read as a plan regression.
+    // Warm-up and timed passes share one scope: a query's internal
+    // caches stay warm across its runs and are all dropped before the
+    // next section (measured: tpch10 queries read ~1 s higher after
+    // the headliners' LSH/shingle caches than isolated).
+    def section(qs: Seq[queries.BoundQuery]): Seq[(String, Option[Double])] =
+      graft.util.CacheScope.withScope {
+        qs.foreach(q => try q.run(spark, sfDir).count()
+          catch { case _: Throwable => () })
+        qs.map(q => q.name -> pairedTime(timeOnce(q), timeOnce(q)))
       }
-      timeAll(hs)
-    }
-    // the ten TPC-H completions ride along as a TRACKED, non-headline
-    // subtotal (r3 verdict item 2): "value" stays the 12-headliner
-    // total BASELINE.md's cross-round ratio is defined on; "tpch10"
-    // is graded against its own same-session DuckDB row in BASELINE.md
+    val results = section(hs)
+    // The ten TPC-H completions ride along as a tracked, non-headline
+    // subtotal: "value" stays the 12-headliner total that BASELINE.md's
+    // cross-round ratio is defined on; "tpch10" is graded against its
+    // own same-session DuckDB row in BASELINE.md.
     val tpchTen = Seq("q6_forecast_revenue", "q8_market_share",
       "q10_returned_items", "q13_order_distribution", "q14_promo_effect",
       "q15_top_supplier", "q17_small_qty_revenue", "q18_large_orders",
@@ -114,29 +101,15 @@ object Bench {
         val missing = tpchTen.filterNot(byName.contains)
         require(missing.isEmpty,
           s"tpch10 subtotal lost queries (renamed/removed?): ${missing.mkString(", ")}")
-        val qs = tpchTen.map(byName)
-        graft.util.CacheScope.withScope {
-          qs.foreach(q => try q.run(spark, sfDir).count()
-            catch { case _: Throwable => () }) // same untimed warm-up
-          timeAll(qs)
-        }
+        section(tpchTen.map(byName))
       }
-    // bench30 (round-5 verdict item 3): frozen per-family regression
-    // set, timed exactly like the other sections (untimed warm-up +
-    // best-of-2 inside one section scope), reported as its own
-    // subtotal. SPARK_GRAFT_SKIP_BENCH30=1 skips it for quick local
+    // bench30: the frozen per-family regression set, reported as its
+    // own subtotal. SPARK_GRAFT_SKIP_BENCH30=1 skips it for quick local
     // headline iterations.
     val bench30Results =
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY") ||
           sys.env.contains("SPARK_GRAFT_SKIP_BENCH30")) Seq.empty
-      else {
-        val qs = queries.Registry.bench30
-        graft.util.CacheScope.withScope {
-          qs.foreach(q => try q.run(spark, sfDir).count()
-            catch { case _: Throwable => () }) // same untimed warm-up
-          timeAll(qs)
-        }
-      }
+      else section(queries.Registry.bench30)
     // failed queries render as JSON null and are EXCLUDED from every
     // subtotal — a regression-to-failure can only ever move a total up
     // (missing time) and is flagged by `failures` + the null itself.

@@ -15,8 +15,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.faces.foreach(f => e.injectFunction(
       (FunctionIdentifier(f.name), new ExpressionInfo("graft.expressions", f.name), f.builder)))
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    e.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
+    e.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
   }
 }
 

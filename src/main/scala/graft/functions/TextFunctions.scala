@@ -16,8 +16,6 @@ object TextFunctions {
   def tokens(text: Column): Column =
     filter(split(text, " "), t => t =!= "")
 
-  def distinctTokens(text: Column): Column = array_distinct(tokens(text))
-
   /** BPE-ish subword split: letter runs, digit runs, single
     * punctuation — the shape of a byte-pair tokenizer's pre-tokenizer. */
   def bpeTokens(text: Column): Column =

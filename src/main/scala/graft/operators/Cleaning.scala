@@ -25,8 +25,4 @@ object Cleaning {
   /** Impute a default for null values (adjust_comments.py:16). */
   def imputeDefault(df: DataFrame, colName: String, default: Column): DataFrame =
     df.withColumn(colName, coalesce(col(colName), default))
-
-  /** Clamp a numeric column into [lo, hi]. */
-  def clamp(df: DataFrame, colName: String, lo: Double, hi: Double): DataFrame =
-    df.withColumn(colName, least(greatest(col(colName), lit(lo)), lit(hi)))
 }

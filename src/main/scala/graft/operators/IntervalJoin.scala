@@ -10,47 +10,31 @@ import org.apache.spark.sql.functions._
   * A naive formulation is a per-key cross product with an inequality
   * predicate — Catalyst plans it as a nested loop, O(n_k²) per key,
   * the non-equi-join scale-killer. This operator BLOCKS on fixed-width
-  * buckets instead: each interval explodes into every bucket index its
-  * span covers, the join runs as a pure EQUI join on
-  * (key, bucket) — shuffle-hashable, AQE-skew-splittable — and the
-  * exact predicate verifies candidates afterwards.
-  *
-  * LOSSLESS: if two intervals overlap, the instant max(a.start,
-  * b.start) lies in both spans, so the bucket containing it is
-  * emitted by both sides — every true pair meets in ≥1 bucket. A pair
-  * can meet in several buckets, so pairs dedupe after the (cheap)
-  * predicate. Bucket width trades fan-out (span/width rows per
-  * interval) against bucket population; pick it near the typical span
-  * so the fan-out is O(1) per interval. Degenerate-key hot buckets
-  * are the same skew surface as every blocked join here (salting /
-  * AQE handles them).
+  * buckets instead (graft.plans.BandJoinRewrite): each interval
+  * explodes into every bucket index its span covers, the join runs as
+  * a pure EQUI join on (key, bucket) — shuffle-hashable,
+  * AQE-skew-splittable — and the exact predicate verifies candidates
+  * afterwards. A pair meets only in the bucket holding max(a.start,
+  * b.start), so it is emitted once without a dedup. Bucket width trades
+  * fan-out (span/width rows per interval) against bucket population;
+  * pick it near the typical span so the fan-out is O(1) per interval.
+  * Degenerate-key hot buckets are the same skew surface as every
+  * blocked join here (salting / AQE handles them).
   */
 object IntervalJoin {
 
   /** `a`/`b`: (key, id, start, end) with integral start/end (micros,
     * days — any unit). Returns one row per overlapping (a, b) pair
-    * with both ids, both spans, and the exact overlap length.
-    *
-    * CONTRACT: (key, id) must be unique within each input — the
-    * multi-bucket dedup groups on (a_key, a_id, b_id) and takes
-    * first() of the spans, so duplicate ids per key would collapse
-    * multiplicity and pick spans nondeterministically. Use the
-    * IntervalJoinRewrite optimizer rule (canonical-bucket pin) when
-    * duplicate-preserving semantics are needed. */
+    * with both ids, both spans, and the exact overlap length. */
   def overlapPairs(a: DataFrame, b: DataFrame, bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
-    def blocked(df: DataFrame, pfx: String) = df.select(
-        col("key").as(s"${pfx}_key"), col("id").as(s"${pfx}_id"),
-        col("start").as(s"${pfx}_start"), col("end").as(s"${pfx}_end"))
-      .withColumn(s"${pfx}_bk", explode(sequence(
-        floor(col(s"${pfx}_start") / bucketWidth).cast("long"),
-        floor(col(s"${pfx}_end") / bucketWidth).cast("long"))))
-    blocked(a, "a").join(blocked(b, "b"),
-        col("a_key") === col("b_key") && col("a_bk") === col("b_bk"))
-      .where(col("a_start") <= col("b_end") && col("b_start") <= col("a_end"))
-      .groupBy("a_key", "a_id", "b_id")
-      .agg(first(col("a_start")).as("a_start"), first(col("a_end")).as("a_end"),
-        first(col("b_start")).as("b_start"), first(col("b_end")).as("b_end"))
+    def side(df: DataFrame, pfx: String) = df.select(
+      col("key").as(s"${pfx}_key"), col("id").as(s"${pfx}_id"),
+      col("start").as(s"${pfx}_start"), col("end").as(s"${pfx}_end"))
+    graft.plans.BandJoinRewrite.bucketed(side(a, "a").join(side(b, "b"),
+        col("a_key") === col("b_key") &&
+          col("a_start") <= col("b_end") && col("b_start") <= col("a_end")),
+        bucketWidth.toDouble)
       .select(col("a_key").as("key"), col("a_id"), col("b_id"),
         col("a_start"), col("a_end"), col("b_start"), col("b_end"),
         (least(col("a_end"), col("b_end")) -

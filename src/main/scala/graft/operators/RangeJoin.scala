@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Interval (range) join: match points to [lo, hi] intervals without
   * the O(points x ranges) cross product a naive BETWEEN predicate
@@ -14,7 +13,9 @@ import org.apache.spark.sql.functions._
   * (shuffle- or broadcast-hash, AQE-eligible) followed by the exact
   * residual BETWEEN filter. Cost is O(points + ranges x spans) where
   * spans = avg interval width / bucketWidth — pick bucketWidth near
-  * the median interval width so spans stays a small constant.
+  * the median interval width so spans stays a small constant. The
+  * plan is graft.plans.BandJoinRewrite's, including its nested-loop
+  * branch for inverted or oversized intervals.
   */
 object RangeJoin {
 
@@ -22,19 +23,7 @@ object RangeJoin {
     * (inclusive both ends). Keeps all columns of both sides. */
   def bucketed(points: DataFrame, pointCol: Column,
                ranges: DataFrame, loCol: Column, hiCol: Column,
-               bucketWidth: Double): DataFrame = {
-    val w = lit(bucketWidth)
-    // guard inverted/empty intervals: sequence(start, stop) THROWS when
-    // start > stop with a positive step; a malformed range row must
-    // yield zero matches (like the naive BETWEEN), not kill the job
-    val lob = floor(loCol / w).cast("long")
-    val hib = floor(hiCol / w).cast("long")
-    val buckets = when(lob <= hib, sequence(lob, hib))
-      .otherwise(array().cast("array<long>"))
-    val r = ranges.withColumn("__bkt", explode(buckets))
-    val p = points.withColumn("__bkt", floor(pointCol / w).cast("long"))
-    p.join(r, Seq("__bkt"))
-      .where(pointCol >= loCol && pointCol <= hiCol)
-      .drop("__bkt")
-  }
+               bucketWidth: Double): DataFrame =
+    graft.plans.BandJoinRewrite.bucketed(
+      points.join(ranges, pointCol >= loCol && pointCol <= hiCol), bucketWidth)
 }

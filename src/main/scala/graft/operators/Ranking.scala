@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Distributed global ranking. A bare `row_number() OVER (ORDER BY …)`
@@ -41,47 +41,43 @@ object Ranking {
     require(Seq("byte", "short", "integer", "long").contains(vt.typeName),
       s"globalCumSum accumulates exact longs; got $vt — cast to an " +
         "integral unit (e.g. cents) explicitly at the call site")
+    withOffsets(df.withColumn("__v", valueCol.cast("long")), sortCols,
+        sum(col("__v")).over(_), sum(col("__v")))
+      .withColumn(outCol, col("__off") + col("__local"))
+      .drop("__v", "__local", "__off")
+  }
+
+  /** `df` + `outCol` = 0-based dense global row number by `sortCols`
+    * (must define a total order for a deterministic result). */
+  def globalRowNumber(df: DataFrame, outCol: String, sortCols: Column*): DataFrame =
+    withOffsets(df, sortCols, row_number().over(_).cast("long"), count(lit(1)))
+      .withColumn(outCol, col("__off") + col("__local") - 1)
+      .drop("__local", "__off")
+
+  /** The shared two-phase body: `df` range-partitioned on `sortCols`,
+    * plus `__local` = `local` over the window of its partition in sort
+    * order, plus `__off` = the sum of `measure` over every earlier
+    * partition. */
+  private def withOffsets(df: DataFrame, sortCols: Seq[Column],
+                          local: WindowSpec => Column, measure: Column): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = df.withColumn("__v", valueCol.cast("long"))
-      .repartitionByRange(parts, sortCols: _*)
+    val parted = df.repartitionByRange(parts, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
     // pin the partitioning: the plan forks below (offsets + join), and
     // an unpersisted repartitionByRange RESAMPLES its boundaries per
     // branch — the branches can then disagree on __pid and corrupt
     // the offsets (observed: a 4000-row spec diff at a boundary)
-    val local = graft.util.CacheScope.persist(parted.withColumn("__lcs",
-      sum(col("__v")).over(Window.partitionBy("__pid").orderBy(sortCols: _*))))
-    val sums = local.groupBy("__pid").agg(sum(col("__v")).as("__psum"))
-    val offsets = sums.as("x")
-      .join(sums.as("y"), col("y.__pid") < col("x.__pid"), "left")
-      .groupBy(col("x.__pid").as("__pid"))
-      .agg(coalesce(sum(col("y.__psum")), lit(0L)).as("__off"))
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(outCol, col("__off") + col("__lcs"))
-      .drop("__pid", "__v", "__lcs", "__off")
-  }
-
-  /** `df` + `outCol` = 0-based dense global row number by `sortCols`
-    * (must define a total order for a deterministic result). */
-  def globalRowNumber(df: DataFrame, outCol: String, sortCols: Column*): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-    // persist pins the sampled range boundaries across the fork below
-    // (see globalCumSum — an unpinned fork can re-sample per branch)
-    val local = graft.util.CacheScope.persist(parted.withColumn("__lrn",
-      row_number().over(Window.partitionBy("__pid").orderBy(sortCols: _*)).cast("long")))
-    // Prefix sums over the P per-partition counts via a P×P self-join
+    val persisted = graft.util.CacheScope.persist(parted.withColumn("__local",
+      local(Window.partitionBy("__pid").orderBy(sortCols: _*))))
+    // Prefix sums over the P per-partition measures via a P×P self-join
     // (P = shuffle partitions, so ~32² rows) — NOT an unpartitioned
     // window, which would plan the very single-partition WindowExec
     // this operator exists to avoid.
-    val cnts = local.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-    val offsets = cnts.as("x")
-      .join(cnts.as("y"), col("y.__pid") < col("x.__pid"), "left")
+    val sizes = persisted.groupBy("__pid").agg(measure.as("__size"))
+    val offsets = sizes.as("x")
+      .join(sizes.as("y"), col("y.__pid") < col("x.__pid"), "left")
       .groupBy(col("x.__pid").as("__pid"))
-      .agg(coalesce(sum(col("y.__cnt")), lit(0L)).as("__off"))
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(outCol, col("__off") + col("__lrn") - 1)
-      .drop("__pid", "__lrn", "__off")
+      .agg(coalesce(sum(col("y.__size")), lit(0L)).as("__off"))
+    persisted.join(broadcast(offsets), "__pid").drop("__pid")
   }
 }

@@ -19,10 +19,24 @@ class PlansSpec extends AnyFunSuite {
     df.select(col("o_orderkey"), col("band_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  // graft.plans.BandJoinRewrite is one rule for both join shapes; the
+  // cases below are named after its point-in-interval shape
+  // (RangeJoinRewrite) and its interval-overlap shape
+  // (IntervalJoinRewrite)
   private def withRule[A](body: => A): A = {
     val old = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = old :+ graft.plans.RangeJoinRewrite
+    spark.experimental.extraOptimizations = old :+ graft.plans.BandJoinRewrite
     try body finally spark.experimental.extraOptimizations = old
+  }
+
+  private def withWidth[A](width: Double)(body: => A): A = {
+    spark.conf.set("spark.graft.bandJoin.bucketWidth", width.toString)
+    try body finally spark.conf.unset("spark.graft.bandJoin.bucketWidth")
+  }
+
+  private def hashJoined(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("HashJoin") || plan.contains("SortMergeJoin")
   }
 
   test("RangeJoinRewrite: BETWEEN join becomes a hash join, identical results") {
@@ -51,7 +65,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("RangeJoinRewrite: oversized-span rows fall back losslessly instead of exploding") {
     // one band spans 1e9 price units = 1e5 buckets at width 10000 —
-    // above maxBucketsPerRow (10000), so it must take the fallback
+    // above MaxBucketsPerRow (10000), so it must take the fallback
     // branch; without the guard this row alone would sequence() 100k
     // elements per row (and OOM/abort at wider spans).
     val wild = bands.union(
@@ -66,14 +80,28 @@ class PlansSpec extends AnyFunSuite {
     }
   }
 
-  test("RangeJoinRewrite maxBucketsPerRow=0 sends everything to the fallback, still correct") {
+  test("RangeJoinRewrite at a width too fine for every band falls back, still correct") {
+    // each band spans 40000 price units: 40000 buckets at width 1.0,
+    // above MaxBucketsPerRow, so the bucketed branch is empty
     val expected = pairs(points.join(bands, betweenCond))
     withRule {
-      spark.conf.set("spark.graft.rangeJoin.maxBucketsPerRow", "0")
-      try {
-        val rewritten = points.join(bands, betweenCond)
-        assert(pairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.rangeJoin.maxBucketsPerRow")
+      withWidth(1.0) {
+        assert(pairs(points.join(bands, betweenCond)) == expected)
+      }
+    }
+  }
+
+  test("BandJoinRewrite: a point-in-interval condition with a third conjunct becomes a hash join") {
+    // the third conjunct reads both sides, so it stays in the join condition
+    def cond = betweenCond && (col("o_orderkey") + col("band_id")) % 2 === 0
+    val naive = points.join(bands, cond)
+    assert(naive.queryExecution.executedPlan.toString.contains("NestedLoop"))
+    val expected = pairs(naive)
+    assert(expected.nonEmpty && expected.forall { case (o, b) => (o + b) % 2 == 0 })
+    withRule {
+      val rewritten = points.join(bands, cond)
+      assert(hashJoined(rewritten), rewritten.queryExecution.executedPlan.toString)
+      assert(pairs(rewritten) == expected)
     }
   }
 
@@ -87,13 +115,21 @@ class PlansSpec extends AnyFunSuite {
     }
   }
 
-  test("RangeJoinRewrite respects the enabled flag") {
+  test("BandJoinRewrite is off under spark.sql.optimizer.excludedRules") {
+    val expected = pairs(points.join(bands, betweenCond))
+    val expectedIv = ivPairs(ivA.join(ivB, overlapCond))
     withRule {
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.BandJoinRewrite")
       try {
-        val q = points.join(bands, betweenCond)
-        assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      } finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+        val between = points.join(bands, betweenCond)
+        val overlap = ivA.join(ivB, overlapCond)
+        for (q <- Seq(between, overlap)) {
+          val plan = q.queryExecution.executedPlan.toString
+          assert(plan.contains("NestedLoop") && !hashJoined(q), plan)
+        }
+        assert(pairs(between) == expected && ivPairs(overlap) == expectedIv)
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+      assert(hashJoined(points.join(bands, betweenCond)))
     }
   }
 
@@ -119,42 +155,56 @@ class PlansSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
 
-  private def withIvRule[A](body: => A): A = {
-    val old = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = old :+ graft.plans.IntervalJoinRewrite
-    try body finally spark.experimental.extraOptimizations = old
-  }
-
   test("IntervalJoinRewrite: overlap join becomes a hash join, identical MULTISET") {
     val naive = ivA.join(ivB, overlapCond)
     assert(naive.queryExecution.executedPlan.toString.contains("NestedLoop"))
     val expected = ivPairs(naive)
     assert(expected.nonEmpty && expected.values.exists(_ > 1),
       "fixture must contain duplicate pairs to test multiplicity")
-    withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+    withRule {
+      withWidth(1000.0) {
         val rewritten = ivA.join(ivB, overlapCond)
-        val plan = rewritten.queryExecution.executedPlan.toString
-        assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
+        assert(hashJoined(rewritten), rewritten.queryExecution.executedPlan.toString)
         assert(ivPairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 
   test("IntervalJoinRewrite: oversized spans fall back losslessly") {
+    // 2e9 / 1000 = 2e6 buckets, above MaxBucketsPerRow
     val huge = ivB.union(spark.range(0, 1).select(
       lit(999L).as("b_id"), lit(-1.0e9).as("b_s"), lit(1.0e9).as("b_e")))
     val expected = ivPairs(ivA.join(huge, overlapCond))
-    withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      spark.conf.set("spark.graft.intervalJoin.maxBucketsPerRow", "100")
-      try {
+    withRule {
+      withWidth(1000.0) {
         assert(ivPairs(ivA.join(huge, overlapCond)) == expected)
-      } finally {
-        spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
-        spark.conf.unset("spark.graft.intervalJoin.maxBucketsPerRow")
       }
+    }
+  }
+
+  test("BandJoinRewrite: every overlap fallback join filters one side to its outliers") {
+    // a fallback join that read both sides whole would be the very
+    // nested loop over all pairs the rewrite exists to avoid
+    // no nullable column, so the only filters are the rule's guards
+    val b = spark.range(0, 150).select(col("id").as("b_id"),
+      (col("id") * 1300.0 + 101.0).as("b_s"), (col("id") * 1300.0 + 3600.0).as("b_e"))
+    withRule {
+      val plan = ivA.join(b, overlapCond).queryExecution.optimizedPlan
+      val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      assert(joins.size == 3, plan)
+      joins.foreach(j => assert(j.children.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter])), j))
+    }
+  }
+
+  test("BandJoinRewrite leaves the joins it built alone") {
+    // RangeJoin.bucketed hands the optimizer a rewritten plan; the rule
+    // must not rewrite its fallback join (the band condition itself) again
+    withRule {
+      val plan = graft.operators.RangeJoin.bucketed(points, col("o_totalprice"),
+        bands, col("lo"), col("hi"), bucketWidth = 10000.0).queryExecution.optimizedPlan
+      assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        .size == 2, plan)
     }
   }
 
@@ -176,11 +226,10 @@ class PlansSpec extends AnyFunSuite {
       "fixture must produce matches involving reversed left rows")
     assert(expected.keys.exists(_._2 == 800L),
       "fixture must produce matches involving reversed right rows")
-    withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+    withRule {
+      withWidth(1000.0) {
         assert(ivPairs(revA.join(revB, overlapCond)) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 
@@ -190,35 +239,12 @@ class PlansSpec extends AnyFunSuite {
     val la = spark.range(0, 200).select(col("id").as("a_id"),
       (col("id") * 700L).as("a_s"), (col("id") * 700L + 2500L).as("a_e"))
     val expected = ivPairs(la.join(ivB, overlapCond))
-    withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+    withRule {
+      withWidth(1000.0) {
         val rewritten = la.join(ivB, overlapCond)
-        val plan = rewritten.queryExecution.executedPlan.toString
-        assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
+        assert(hashJoined(rewritten), rewritten.queryExecution.executedPlan.toString)
         assert(ivPairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
-    }
-  }
-
-  test("IntervalJoinRewrite leaves BETWEEN and equi joins to other rules") {
-    withIvRule {
-      // point-in-interval (degenerate [p,p] interval) must NOT match —
-      // that is RangeJoinRewrite's territory
-      val between = points.join(bands, betweenCond)
-      assert(between.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      val equi = ivA.join(ivB, col("a_id") === col("b_id"))
-      assert(equi.queryExecution.executedPlan.toString.contains("HashJoin"))
-    }
-  }
-
-  test("IntervalJoinRewrite respects the enabled flag") {
-    withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.enabled", "false")
-      try {
-        val q = ivA.join(ivB, overlapCond)
-        assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      } finally spark.conf.set("spark.graft.intervalJoin.enabled", "true")
+      }
     }
   }
 
@@ -227,14 +253,13 @@ class PlansSpec extends AnyFunSuite {
     // session-overlap pairs the bound q_interval_join computes
     val expected = graft.queries.Registry.queries("q_interval_join")(
       spark, sfTiny).count()
-    withIvRule {
+    withRule {
       def spans(t: String) = graft.sources.Tables.events(spark, sfTiny)
         .where(col("event_type") === t)
         .groupBy(col("user_id"), expr("unix_date(CAST(ts AS DATE))").as("dd"))
         .agg(min(unix_micros(col("ts"))).as("s"),
           max(unix_micros(col("ts"))).as("e"))
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "21600000000.0")
-      try {
+      withWidth(21600000000.0) {
         val a = spans("click").select(col("user_id").as("u1"),
           col("s").as("a_s"), col("e").as("a_e"))
         val b = spans("error").select(col("user_id").as("u2"),
@@ -242,7 +267,7 @@ class PlansSpec extends AnyFunSuite {
         val joined = a.join(b, col("u1") === col("u2") &&
           col("a_s") <= col("b_e") && col("b_s") <= col("a_e"))
         assert(joined.count() == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 }

@@ -27,4 +27,17 @@ class SessionConfSpec extends AnyFunSuite {
     // shuffles start at the bench width, 8 × cores
     assert(spark.sessionState.conf.numShufflePartitions == 8 * Cpus.toInt)
   }
+
+  test("src/main reads exactly two spark.graft.* keys") {
+    // every graft knob needs a caller; a new one must edit this set
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val key = """spark\.graft\.[A-Za-z]+(\.[A-Za-z]+)*""".r
+    val stream = java.nio.file.Files.walk(root)
+    val keys = try {
+      stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(p => key.findAllIn(java.nio.file.Files.readString(p))).toSet
+    } finally stream.close()
+    assert(keys == Set("spark.graft.bandJoin.bucketWidth", "spark.graft.warm.heapFraction"))
+  }
 }

@@ -106,7 +106,7 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("RangeJoinRewrite survives inverted intervals too") {
     val old = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = old :+ graft.plans.RangeJoinRewrite
+    spark.experimental.extraOptimizations = old :+ graft.plans.BandJoinRewrite
     try {
       val points = Seq(1.0, 150.0).toDF("p")
       val ranges = Seq((100.0, 200.0), (300.0, 50.0)).toDF("lo", "hi")
