@@ -115,22 +115,26 @@ class PlansSpec extends AnyFunSuite {
     }
   }
 
-  test("BandJoinRewrite is off under spark.sql.optimizer.excludedRules") {
-    val expected = pairs(points.join(bands, betweenCond))
-    val expectedIv = ivPairs(ivA.join(ivB, overlapCond))
+  // the rule's on/off switch is Spark's own
+  // spark.sql.optimizer.excludedRules: excluded, a join stays the
+  // nested loop with the same answer; unset, the rewrite is back
+  private def checkExcluded[K](q: => org.apache.spark.sql.DataFrame,
+                               answer: org.apache.spark.sql.DataFrame => K): Unit = {
+    val expected = answer(q)
     withRule {
       spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.BandJoinRewrite")
       try {
-        val between = points.join(bands, betweenCond)
-        val overlap = ivA.join(ivB, overlapCond)
-        for (q <- Seq(between, overlap)) {
-          val plan = q.queryExecution.executedPlan.toString
-          assert(plan.contains("NestedLoop") && !hashJoined(q), plan)
-        }
-        assert(pairs(between) == expected && ivPairs(overlap) == expectedIv)
+        val off = q
+        val plan = off.queryExecution.executedPlan.toString
+        assert(plan.contains("NestedLoop") && !hashJoined(off), plan)
+        assert(answer(off) == expected)
       } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-      assert(hashJoined(points.join(bands, betweenCond)))
+      assert(hashJoined(q))
     }
+  }
+
+  test("RangeJoinRewrite respects the enabled flag") {
+    checkExcluded(points.join(bands, betweenCond), pairs)
   }
 
   // -------------------------------------------------------------
@@ -246,6 +250,10 @@ class PlansSpec extends AnyFunSuite {
         assert(ivPairs(rewritten) == expected)
       }
     }
+  }
+
+  test("IntervalJoinRewrite respects the enabled flag") {
+    checkExcluded(ivA.join(ivB, overlapCond), ivPairs)
   }
 
   test("IntervalJoinRewrite composes with the operator twin on real data") {
